@@ -27,10 +27,6 @@ def event_day(ts: Column) -> Column:
     return F.to_date(ts)
 
 
-def event_day_sql(e: str) -> str:
-    return f"CAST({e} AS DATE)"
-
-
 def date_str_prefix(c: Column) -> Column:
     """String variant: leading 'YYYY-MM-DD' prefix, else the raw value
     (consolidate_events.py:36-38 returns v when no match)."""
@@ -93,19 +89,6 @@ def canonical_key_sql(name_e: str, ts_e: str) -> str:
 def iso_utc_format(ts: Column) -> Column:
     """Aware UTC ts -> 'yyyy-MM-ddTHH:mm:ssZ' (dice.py:65-66)."""
     return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def iso_utc_format_sql(e: str) -> str:
-    return f"strftime({e}, '%Y-%m-%dT%H:%M:%SZ')"
-
-
-def iso_local_format(ts: Column) -> Column:
-    """Naive local ts -> ISO string, null -> '' (gsheet.py:29-36)."""
-    return F.coalesce(F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"), F.lit(""))
-
-
-def iso_local_format_sql(e: str) -> str:
-    return f"coalesce(strftime({e}, '%Y-%m-%dT%H:%M:%S'), '')"
 
 
 # ------------------------------------- B10/B11 deterministic parse cascade

@@ -35,10 +35,3 @@ def run_id() -> str:
     (shotgun.py:118; NOT a per-row uuid() — SURVEY §2.B24)."""
     return str(uuid.uuid4())
 
-
-def with_lineage(df, run: str):
-    """Append scrape_ts_utc + ingestion_run_id lineage columns
-    (models.py:41-42)."""
-    return df.withColumn("scrape_ts_utc", F.current_timestamp()).withColumn(
-        "ingestion_run_id", F.lit(run)
-    )

@@ -62,10 +62,6 @@ def strip_accents(c: Column) -> Column:
     return F.translate(c, ACCENT_SRC, ACCENT_DST)
 
 
-def strip_accents_sql(e: str) -> str:
-    return f"strip_accents({e})"
-
-
 # ------------------------------------------------------------ B2 norm_basic
 
 def norm_basic(c: Column) -> Column:

@@ -554,30 +554,6 @@ ORDER BY event_date, event_type
 """
 
 
-# --------------------------- E8: sketch-based approximations (rows-only)
-
-def approx_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB fast path for E7: HLL distinct + quantile sketches.
-
-    No DuckDB oracle on purpose — approximation parameters differ across
-    engines, so the driver records the weaker rows-only check; the EXACT
-    twin (e7_daily_distinct_users / e6_price_percentiles) carries the
-    value-level correctness burden. Plan shape is identical to the exact
-    form (partial sketch merge map-side), which is the point: swapping
-    exact -> sketch changes constants, not the shuffle structure.
-    """
-    ev = load_table(spark, sf_dir, "events")  # agg-first: keep spread
-    return (
-        ev.groupBy(F.to_date("ts").alias("event_date"))
-        .agg(
-            F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-            F.percentile_approx("value", 0.5, 1000).alias("approx_p50_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .orderBy("event_date")
-    )
-
-
 def session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4's twin via Spark's native session_window (the streaming-capable
     operator — same gap-merge semantics, usable under watermarks). The

@@ -12,8 +12,9 @@ than DuckDB-oracled.
 Per iteration:
 
 1. **assign**: ``argmin_j ||x - c_j||²`` as a CONSTANT-SIZE broadcast
-   projection: the k centroids collapse into ONE broadcast row holding
-   an array of (j, vec) structs, and each embedding row ranks all k
+   projection (:func:`route` over a one-level index): the k centroids
+   collapse into ONE broadcast row holding an array of (j, vec, n2)
+   structs, and each embedding row ranks all k
    in-place with ``array_min(transform(...))`` over (sq_dist, j)
    structs — the same device as ``similarity._assign_buckets``. Plan
    size is O(1) in k (the centroid floats travel as broadcast DATA, not
@@ -74,6 +75,25 @@ TWO_LEVEL_MIN_K = 64
 # tier costs routing approximation (the dispatcher widens nprobe by
 # one to hold the keep-rate/recall bars — tests/test_three_level.py).
 THREE_LEVEL_MIN_K = 2048
+
+
+def _levels(k: int) -> int:
+    """Routing depth for K centroids: flat below TWO_LEVEL_MIN_K, two
+    levels up to THREE_LEVEL_MIN_K, three above. Reads the thresholds
+    at CALL time (tests monkeypatch them)."""
+    return 1 + (k >= TWO_LEVEL_MIN_K) + (k >= THREE_LEVEL_MIN_K)
+
+
+def _tier_nprobe(nprobe: int | None, levels: int) -> int | None:
+    """Per-tier probe width of a routed assignment: each tier past the
+    second widens the caller's probe by one. The doubly-nested prune
+    costs ~one probe step of routing agreement (measured at K=400:
+    3-level nprobe=3 holds the two-level nprobe=2 quality bars —
+    keep-rate delta 0.027, pair recall 0.715 — while nprobe=2 falls to
+    0.59 recall); even widened, ~(1+2*(nprobe+1))*K^(1/3) candidates
+    vs (1+nprobe)*sqrt(K) is ~1.7x fewer at the threshold."""
+    return nprobe if levels <= 2 else nprobe + levels - 2
+
 
 # Size gate for the DRIVER-SIDE Lloyd fit when the caller does not
 # force a strategy (round 16 — the components.DRIVER_CC_MAX_SYM_ROWS
@@ -192,18 +212,6 @@ def _collect_ids_matrix(slim: DataFrame, id_col: str, vec_col: str):
     return ids, np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
 
 
-_TL_SCHEMA = (
-    "_coarse ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>, "
-    "_groups MAP<INT, ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>>"
-)
-
-_TL3_SCHEMA = (
-    "_coarse ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>, "
-    "_mid MAP<INT, ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>>, "
-    "_groups MAP<INT, ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>>"
-)
-
-
 def _sq_dist_lambda(vec, cent_vec):
     """Squared euclidean distance usable INSIDE a higher-order-function
     lambda. FP-identical to the sum a hand-inlined
@@ -265,70 +273,7 @@ def kmeans_init(
     return [[float(x) for x in r["_v"]] for r in got[:k]]
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    centroids: list[list[float]] | DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-) -> DataFrame:
-    """Adds ``out_col`` (argmin cluster id) and ``_sq_dist`` columns.
-
-    ``centroids`` is either the trainer's list-of-lists (cluster id =
-    list position) or a (centroid_id, centroid_vec) DataFrame. Either
-    way the k vectors are collapsed into one broadcast row and ranked
-    per embedding row with a constant-size HOF expression — assignment
-    never leaves the scan stage and the plan does not grow with k.
-
-    A driver-resident list skips the collect_list mini-aggregation and
-    becomes the broadcast row DIRECTLY (the payload is already in list
-    position order, which is cluster-id order — identical struct array,
-    one fewer job per invocation; OPTIMIZATION_r15.md)."""
-    if isinstance(centroids, DataFrame):
-        cents = centroids.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id").alias("j"),
-                    F.col("centroid_vec").alias("v"),
-                )
-            ).alias("_cents")
-        )
-    else:
-        cents = driver_rows_df(
-            emb.sparkSession,
-            [(
-                [
-                    (j, [float(x) for x in c])
-                    for j, c in enumerate(centroids)
-                ],
-            )],
-            "_cents ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>>>",
-        )
-    # named_struct, not struct(...).alias(...): aliases are stripped
-    # inside HOF lambdas (same pitfall as similarity._assign_buckets).
-    # array_min over (d, j) structs = argmin distance, lowest-j tiebreak.
-    best = F.array_min(
-        F.transform(
-            "_cents",
-            lambda c: F.named_struct(
-                F.lit("d"),
-                _sq_dist_lambda(F.col(vec_col), c["v"]),
-                F.lit("j"),
-                c["j"],
-            ),
-        )
-    )
-    return (
-        emb.crossJoin(F.broadcast(cents))
-        .withColumn("_b", best)
-        .select(
-            *emb.columns,
-            F.col("_b.j").alias(out_col),
-            F.col("_b.d").alias("_sq_dist"),
-        )
-    )
-
-
-def _tl_score(metric: str, vec, cand, n2_col):
+def _rank_score(metric: str, vec, cand, n2_col):
     """Ranking score for one (row vector, candidate struct) pair inside a
     HOF lambda — lower is better in BOTH metrics so array_min/array_sort
     share one shape. ``sq_dist`` is the trainer's metric; ``cosine`` is
@@ -347,75 +292,82 @@ def _tl_score(metric: str, vec, cand, n2_col):
     )
 
 
-def build_two_level_index(
+def build_index(
     id_vecs: list[tuple[int, list[float]]],
-    coarse_k: int | None = None,
+    levels: int,
     metric: str = "sq_dist",
     max_iters: int = 3,
-    coarse_vecs: list[list[float]] | None = None,
+    reuse: list[list[float]] | None = None,
 ):
-    """Group K fine centroids under ~sqrt(K) coarse centroids so
-    assignment ranks sqrt(K) + nprobe*(K/sqrt(K)) candidates per row
-    instead of K (hierarchical/two-level quantization — the standard
-    large-K device: Nister & Stewenius 2006 vocabulary trees, FAISS's
-    coarse-quantizer + IVF composition) — the N*K*dim flop term that
-    dominates auto-K paths
-    (K proportional to N makes flat assignment N^2*dim/60; two-level cuts
-    it to ~N*sqrt(K)*dim). The coarse level is trained by a small Lloyd
-    loop over the K fine centroids, then every fine centroid is routed
-    to its nearest coarse centroid under ``metric`` (the metric the
-    assignment itself will rank with, so probe order and grouping
-    agree). Coarse centroids that attract no fine members are dropped,
-    which guarantees every probed group key exists in the broadcast map
-    (ANSI ``element_at`` stays crash-free by construction).
+    """Group K fine centroids into an L-level routing tree so assignment
+    ranks ~(1 + (L-1)*nprobe)*K^(1/L) candidates per row instead of K
+    (hierarchical quantization — Nister & Stewenius 2006 vocabulary
+    trees, FAISS's coarse-quantizer + IVF composition; REPOSE's one
+    recursive partition structure at every depth). With K proportional
+    to N, flat assignment's N*K*dim flops are the dominant term; two
+    levels cut it to ~N*sqrt(K)*dim, three to ~N*K^(1/3)*dim.
 
-    Returns ``(coarse, groups)``: ``coarse`` = [(g, vec, n2)] live coarse
-    entries, ``groups`` = {g: [(j, vec, n2)]} fine members. Both are
-    plain Python (driver-side, K*dim floats — same order of driver state
-    as the trainer's own centroid list).
+    Returns ``(top, map_1, ..., fine_map)``: ``top`` = [(id, vec, n2)]
+    live top entries; each map sends an entry id of the tier above to
+    its [(id, vec, n2)] members, ending at the fine centroids. ``L = 1``
+    returns ``(fine,)`` — the flat trainer assignment. Plain Python,
+    K*dim floats: the same order of driver state as the trainer's own
+    centroid list.
 
-    Assignment under nested pruning is APPROXIMATE: the true nearest fine
-    centroid may live in an unprobed coarse group. Callers either probe
-    nprobe > 1 groups (IVF's own device) or pin the agreement/keep-rate
-    delta in pytest — the flat form stays the oracle path.
+    Construction, bottom up: tier i counted from the top (i = 1..L-1)
+    gets ``max(round(K**(i/L)), 2**i)`` centroids, fitted by a
+    driver-side numpy Lloyd over EVERY centroid of the tier below in
+    ``metric`` space (the metric the assignment ranks with, so probe
+    order and grouping agree); each lower centroid then routes to its
+    nearest one. Upper-tier ids are positions in their Lloyd output;
+    only entries that attract members become members of the tier above,
+    so every probed map key exists (ANSI ``element_at`` stays crash-free
+    by construction). Deterministic: stride init over id-sorted order,
+    argmin's first-index tiebreak = lowest id.
 
-    ``coarse_vecs`` reuses a previously-trained coarse level (skipping
-    the coarse fit; only the fine->coarse ROUTING reruns) — the Lloyd
+    ``reuse`` supplies the vectors of the tier just above fine (skipping
+    its Lloyd; only the routing and any higher tier rerun) — the Lloyd
     caller's amortization: fine centroids drift slowly between
-    iterations, and the coarse level is routing structure whose quality
-    affects only approximation, never correctness.
+    iterations, and routing structure affects approximation, never
+    correctness. Assignment under nested pruning is APPROXIMATE: callers
+    probe nprobe > 1 entries per tier and pin the agreement/keep-rate
+    deltas in pytest; the flat form stays the oracle path.
 
-    The whole build runs DRIVER-SIDE in numpy: the K fine centroids are
-    already driver state (K*dim floats — the same bound as the
-    trainer's own centroid list), so a K-row Lloyd costs milliseconds
-    there, while the earlier nested-Spark-fit form cost a ~3-4 s
-    JOB-LATENCY constant per build (the thing that set the round-10
-    single-node crossover at K~300). Deterministic: stride init over
-    id-sorted order, argmin's first-index tiebreak = lowest group id."""
+    The build runs DRIVER-SIDE: the K fine centroids are already driver
+    state, so a K-row Lloyd costs milliseconds, where the earlier
+    nested-Spark-fit form paid a ~3-4 s job-latency constant per build."""
     import numpy as np
 
     k = len(id_vecs)
-    if coarse_k is None:
-        coarse_k = max(int(round(k**0.5)), 2)
-    ids = [int(j) for j, _ in id_vecs]
-    V = np.asarray([[float(x) for x in v] for _, v in id_vecs])
-    X = _np_metric_space(V, metric)
-    if coarse_vecs is None:
-        C = _np_lloyd(X, ids, coarse_k, metric, max_iters)
-    else:
-        C = np.asarray([[float(x) for x in v] for v in coarse_vecs])
-    g = _np_route(X, C, metric)
-    groups: dict[int, list[tuple[int, list[float], float]]] = {}
-    for pos, (j, v) in enumerate(id_vecs):
+    tier = []
+    for j, v in id_vecs:
         vv = [float(x) for x in v]
-        groups.setdefault(int(g[pos]), []).append(
-            (int(j), vv, float(sum(x * x for x in vv)))
-        )
-    coarse = [
-        (gi, [float(x) for x in C[gi]], float((C[gi] * C[gi]).sum()))
-        for gi in sorted(groups)
-    ]
-    return coarse, groups
+        tier.append((int(j), vv, float(sum(x * x for x in vv))))
+    rows = list(range(k))  # each tier entry's row in X
+    ids = [j for j, _, _ in tier]
+    X = _np_metric_space(np.asarray([v for _, v, _ in tier]), metric)
+    maps = []
+    for i in range(levels - 1, 0, -1):
+        if reuse is not None and i == levels - 1:
+            C = np.asarray([[float(x) for x in v] for v in reuse])
+        else:
+            n_i = max(int(round(k ** (i / levels))), 2**i)
+            C = _np_lloyd(X, ids, n_i, metric, max_iters)
+        g = _np_route(X, C, metric)
+        members: dict[int, list[tuple[int, list[float], float]]] = {}
+        for r, e in zip(rows, tier):
+            members.setdefault(int(g[r]), []).append(e)
+        maps.append(members)
+        rows = sorted(members)  # dead entries dropped
+        tier = [
+            (c, [float(x) for x in C[c]], float((C[c] * C[c]).sum()))
+            for c in rows
+        ]
+        # the next tier fits over these centroids IN THE SAME METRIC
+        # SPACE (cosine: means of unit vectors, re-mapped to the sphere)
+        X = _np_metric_space(C, metric)
+        ids = list(range(C.shape[0]))
+    return (tier, *reversed(maps))
 
 
 def _np_metric_space(V, metric: str):
@@ -474,303 +426,76 @@ def _np_lloyd(X, ids: list[int], n_clusters: int, metric: str,
     return C
 
 
-def build_three_level_index(
-    id_vecs: list[tuple[int, list[float]]],
-    mid_k: int | None = None,
-    top_k: int | None = None,
-    metric: str = "sq_dist",
-    max_iters: int = 3,
-    mid_vecs: list[list[float]] | None = None,
-):
-    """Route K fine centroids through a ~K^(1/3)-ary three-tier tree —
-    the round-11 extension of :func:`build_two_level_index` for K in the
-    thousands, where even sqrt(K) coarse candidates dominate the
-    assignment flops (BASELINE.md 125x table: the two-level 25x->125x
-    segment ran alpha~1.06, the N*sqrt(K)*dim = N^1.5 curve when K
-    tracks N). Assignment ranks ~top_k + nprobe*(mid_k/top_k) +
-    nprobe*(K/mid_k) candidates; at the default balanced fanout
-    (top_k = K^(1/3), mid_k = K^(2/3)) that is ~(1+2*nprobe)*K^(1/3) —
-    N^(4/3) total when K tracks N. Same vocabulary-tree device
-    (Nister & Stewenius 2006 use depth ~6 at 1M leaves; FAISS's
-    IMI/coarse-quantizer hierarchy is the IVF analog).
-
-    Construction mirrors the two-level build exactly, one tier deeper:
-    a driver-side numpy Lloyd fits mid_k mid centroids over the fine
-    centroids, every fine centroid routes to its nearest mid; a second
-    K^(2/3)-row Lloyd fits top_k top centroids over the MID centroids,
-    every mid routes to its nearest top. Mid ids are synthetic
-    (0..mid_k-1); dead mids and dead tops are dropped, so every probed
-    map key exists (ANSI element_at stays crash-free by construction).
-
-    Returns ``(top, mids, groups)``: ``top`` = [(t, vec, n2)] live top
-    entries, ``mids`` = {t: [(m, vec, n2)]}, ``groups`` = {m: [(j, vec,
-    n2)]}. ``mid_vecs`` reuses a previously-fitted mid level across
-    Lloyd iterations (fine centroids drift slowly; routing structure,
-    not correctness) — the top level refits over the reused mids, a
-    K^(2/3)-row numpy job.
-
-    Assignment under doubly-nested pruning is APPROXIMATE at both
-    tiers; callers probe nprobe > 1 groups per tier and pin keep-rate /
-    agreement deltas in pytest (tests/test_three_level.py) — the flat
-    form stays the oracle path."""
-    import numpy as np
-
-    k = len(id_vecs)
-    if mid_k is None:
-        mid_k = max(int(round(k ** (2.0 / 3.0))), 4)
-    if top_k is None:
-        top_k = max(int(round(k ** (1.0 / 3.0))), 2)
-    ids = [int(j) for j, _ in id_vecs]
-    V = np.asarray([[float(x) for x in v] for _, v in id_vecs])
-    X = _np_metric_space(V, metric)
-    if mid_vecs is None:
-        M = _np_lloyd(X, ids, mid_k, metric, max_iters)
-    else:
-        M = np.asarray([[float(x) for x in v] for v in mid_vecs])
-    g_fine = _np_route(X, M, metric)
-    # top tier fits over the mid centroids IN THE SAME METRIC SPACE
-    # (for cosine the mids are means of unit vectors — re-mapping to
-    # the unit sphere keeps the grouping argument intact)
-    MX = _np_metric_space(M, metric)
-    T = _np_lloyd(MX, list(range(M.shape[0])), top_k, metric, max_iters)
-    g_mid = _np_route(MX, T, metric)
-
-    groups: dict[int, list[tuple[int, list[float], float]]] = {}
-    for pos, (j, v) in enumerate(id_vecs):
-        vv = [float(x) for x in v]
-        groups.setdefault(int(g_fine[pos]), []).append(
-            (int(j), vv, float(sum(x * x for x in vv)))
-        )
-    mids: dict[int, list[tuple[int, list[float], float]]] = {}
-    for m in sorted(groups):  # dead mids (no fine members) dropped here
-        mv = [float(x) for x in M[m]]
-        mids.setdefault(int(g_mid[m]), []).append(
-            (m, mv, float((M[m] * M[m]).sum()))
-        )
-    top = [
-        (t, [float(x) for x in T[t]], float((T[t] * T[t]).sum()))
-        for t in sorted(mids)  # dead tops dropped
-    ]
-    return top, mids, groups
+_ENTRIES = "ARRAY<STRUCT<j: INT, v: ARRAY<DOUBLE>, n2: DOUBLE>>"
 
 
-def kmeans_assign_three_level(
+def route(
     emb: DataFrame,
     index,
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
+    n_keep: int = 1,
     nprobe: int = 2,
     metric: str = "sq_dist",
+    vec_col: str = "embedding",
+    out_col: str = "cluster",
     norm2_col: str | None = None,
     score_col: str = "_sq_dist",
 ) -> DataFrame:
-    """Top -> mid -> fine assignment against a
-    :func:`build_three_level_index` result: rank the live top centroids,
-    take the best ``nprobe`` tops' mids, rank THOSE, take the best
-    ``nprobe`` mids' fine members, rank those. Shuffle-free like the
-    flat and two-level forms — the whole tree travels as ONE broadcast
-    row (array + two maps, the same K*dim doubles plus ~K^(2/3) mid
-    vectors), and all three ranking tiers are constant-size HOF
-    expressions, so the plan stays O(1) in K."""
-    top, mids, groups = index
-    idx = driver_rows_df(
-        emb.sparkSession, [(top, mids, groups)], _TL3_SCHEMA
+    """Route each row of ``emb`` down a :func:`build_index` tree: rank
+    the top entries, take the best ``nprobe``, flatten their members
+    from the next tier's map, and repeat to the fine centroids.
+
+    ``n_keep == 1`` adds ``out_col`` (argmin centroid id) and
+    ``score_col`` (the winner's score: sq dist for the trainer metric,
+    negative rounded cosine for ``cosine``); ``n_keep > 1`` emits one
+    row per (vector, kept centroid) for the ``n_keep`` best — the
+    ``similarity._assign_buckets(n_keep>1)`` shape the multi-probe query
+    side of an all-vectors kNN needs. Only probed groups' members can be
+    kept, so callers probe at least as many entries as they keep.
+
+    Shuffle-free: the whole tree travels as ONE broadcast row (an array
+    plus one map per lower tier — the K*dim doubles the flat ranking
+    broadcasts, plus the upper tiers' vectors) and every ranking tier is
+    a constant-size HOF expression, so the plan stays O(1) in K (module
+    docstring). Ties break to the lowest id via struct order."""
+    cols = [f"_t{i}" for i in range(len(index))]
+    schema = ", ".join(
+        f"{c} {_ENTRIES if i == 0 else f'MAP<INT, {_ENTRIES}>'}"
+        for i, c in enumerate(cols)
     )
+    idx = driver_rows_df(emb.sparkSession, [tuple(index)], schema)
     n2 = F.col(norm2_col) if norm2_col else None
 
     def _ranked(c):
+        # named_struct, not struct(...).alias(...): aliases are stripped
+        # inside HOF lambdas (same pitfall as similarity._assign_buckets)
         return F.named_struct(
             F.lit("d"),
-            _tl_score(metric, F.col(vec_col), c, n2),
+            _rank_score(metric, F.col(vec_col), c, n2),
             F.lit("j"),
             c["j"],
         )
 
-    probed_top = F.slice(
-        F.array_sort(F.transform("_coarse", _ranked)), 1, nprobe
-    )
-    mid_cand = F.flatten(
-        F.transform(probed_top, lambda p: F.element_at(F.col("_mid"), p["j"]))
-    )
-    probed_mid = F.slice(
-        F.array_sort(F.transform(mid_cand, _ranked)), 1, nprobe
-    )
-    # element_at (not try_element_at) at both tiers: every probed key is
-    # a map key by construction (dead mids/tops dropped at build time) —
-    # a miss is an index-construction bug and should fail loud.
-    fine_cand = F.flatten(
-        F.transform(
-            probed_mid, lambda p: F.element_at(F.col("_groups"), p["j"])
+    cand = F.col(cols[0])
+    for col in cols[1:]:
+        probed = F.slice(F.array_sort(F.transform(cand, _ranked)), 1, nprobe)
+        # element_at (not try_element_at): every probed id is a map key
+        # by construction (dead entries are dropped at build time) — a
+        # miss is an index-construction bug and should fail loud.
+        cand = F.flatten(
+            F.transform(probed, lambda p: F.element_at(F.col(col), p["j"]))
         )
-    )
-    best = F.array_min(F.transform(fine_cand, _ranked))
-    return (
-        emb.crossJoin(F.broadcast(idx))
-        .withColumn("_b", best)
-        .select(
+    joined = emb.crossJoin(F.broadcast(idx))
+    if n_keep == 1:
+        return joined.withColumn(
+            "_b", F.array_min(F.transform(cand, _ranked))
+        ).select(
             *emb.columns,
             F.col("_b.j").alias(out_col),
             F.col("_b.d").alias(score_col),
         )
-    )
-
-
-def kmeans_assign_two_level(
-    emb: DataFrame,
-    index,
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-    nprobe: int = 2,
-    metric: str = "sq_dist",
-    norm2_col: str | None = None,
-    score_col: str = "_sq_dist",
-) -> DataFrame:
-    """Coarse->fine assignment against a :func:`build_two_level_index`
-    result: rank the live coarse centroids, take the best ``nprobe``
-    groups, rank only THEIR fine members. Shuffle-free like the flat
-    form — the whole index travels as ONE broadcast row (array + map of
-    K*dim doubles, the same bytes the flat broadcast carries), and both
-    ranking levels are constant-size HOF expressions, so the plan stays
-    O(1) in K. ``score_col`` gets the winner's score (sq dist for the
-    trainer metric, negative rounded cosine for ``cosine``)."""
-    coarse, groups = index
-    idx = driver_rows_df(
-        emb.sparkSession, [(coarse, groups)], _TL_SCHEMA
-    )
-    n2 = F.col(norm2_col) if norm2_col else None
-
-    def _ranked(c):
-        return F.named_struct(
-            F.lit("d"),
-            _tl_score(metric, F.col(vec_col), c, n2),
-            F.lit("j"),
-            c["j"],
-        )
-
-    probed = F.slice(
-        F.array_sort(F.transform("_coarse", _ranked)), 1, nprobe
-    )
-    # element_at (not try_element_at): every probed group id is a map key
-    # by construction (dead coarse entries are dropped at build time) —
-    # a miss here is an index-construction bug and should fail loud.
-    cand = F.flatten(
-        F.transform(probed, lambda p: F.element_at(F.col("_groups"), p["j"]))
-    )
-    best = F.array_min(F.transform(cand, _ranked))
-    return (
-        emb.crossJoin(F.broadcast(idx))
-        .withColumn("_b", best)
-        .select(
-            *emb.columns,
-            F.col("_b.j").alias(out_col),
-            F.col("_b.d").alias(score_col),
-        )
-    )
-
-
-def kmeans_assign_two_level_multi(
-    emb: DataFrame,
-    index,
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-    n_keep: int = 2,
-    nprobe: int = 2,
-    metric: str = "sq_dist",
-    norm2_col: str | None = None,
-) -> DataFrame:
-    """Multi-keep coarse->fine assignment: like
-    :func:`kmeans_assign_two_level` but emits each row's ``n_keep``
-    BEST fine centroids (one output row per (vector, kept centroid) —
-    the ``_assign_buckets(n_keep>1)`` shape). The multi-probe query
-    side of an all-vectors kNN needs this: every vector probes its
-    n_keep nearest lists, and ranking all K flat is the N*K*dim term
-    the routing tiers exist to kill (round-11: the labelqa 125x probe
-    measured the flat double-assignment at ~10 minutes vs ~1 for the
-    routed form). ``nprobe`` coarse groups are searched; their fine
-    members are ranked and the best ``n_keep`` kept, so callers should
-    probe at least as many groups as they keep."""
-    coarse, groups = index
-    idx = driver_rows_df(
-        emb.sparkSession, [(coarse, groups)], _TL_SCHEMA
-    )
-    n2 = F.col(norm2_col) if norm2_col else None
-
-    def _ranked(c):
-        return F.named_struct(
-            F.lit("d"),
-            _tl_score(metric, F.col(vec_col), c, n2),
-            F.lit("j"),
-            c["j"],
-        )
-
-    probed = F.slice(
-        F.array_sort(F.transform("_coarse", _ranked)), 1, nprobe
-    )
-    cand = F.flatten(
-        F.transform(probed, lambda p: F.element_at(F.col("_groups"), p["j"]))
-    )
     kept = F.slice(F.array_sort(F.transform(cand, _ranked)), 1, n_keep)
-    return (
-        emb.crossJoin(F.broadcast(idx))
-        .select(*emb.columns, F.explode(kept).alias("_b"))
-        .select(*emb.columns, F.col("_b.j").alias(out_col))
-    )
-
-
-def kmeans_assign_three_level_multi(
-    emb: DataFrame,
-    index,
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-    n_keep: int = 2,
-    nprobe: int = 2,
-    metric: str = "sq_dist",
-    norm2_col: str | None = None,
-) -> DataFrame:
-    """Multi-keep top -> mid -> fine assignment: like
-    :func:`kmeans_assign_three_level` but emits each row's ``n_keep``
-    BEST fine centroids (the ``_assign_buckets(n_keep>1)`` shape) —
-    the round-12 completion of the labelqa routing story: the QUERY
-    leg of an all-vectors kNN probes n_keep lists, and above
-    THREE_LEVEL_MIN_K even the sqrt(K) coarse ranking of the two-level
-    multi form dominates (the same N*sqrt(K)*dim term the single-keep
-    dispatcher already routes around). Probing semantics are identical
-    to the single-keep three-level form (nprobe tops -> nprobe mids ->
-    rank their fine members); callers should probe at least as many
-    groups per tier as they keep fine centroids."""
-    top, mids, groups = index
-    idx = driver_rows_df(
-        emb.sparkSession, [(top, mids, groups)], _TL3_SCHEMA
-    )
-    n2 = F.col(norm2_col) if norm2_col else None
-
-    def _ranked(c):
-        return F.named_struct(
-            F.lit("d"),
-            _tl_score(metric, F.col(vec_col), c, n2),
-            F.lit("j"),
-            c["j"],
-        )
-
-    probed_top = F.slice(
-        F.array_sort(F.transform("_coarse", _ranked)), 1, nprobe
-    )
-    mid_cand = F.flatten(
-        F.transform(probed_top, lambda p: F.element_at(F.col("_mid"), p["j"]))
-    )
-    probed_mid = F.slice(
-        F.array_sort(F.transform(mid_cand, _ranked)), 1, nprobe
-    )
-    fine_cand = F.flatten(
-        F.transform(
-            probed_mid, lambda p: F.element_at(F.col("_groups"), p["j"])
-        )
-    )
-    kept = F.slice(F.array_sort(F.transform(fine_cand, _ranked)), 1, n_keep)
-    return (
-        emb.crossJoin(F.broadcast(idx))
-        .select(*emb.columns, F.explode(kept).alias("_b"))
-        .select(*emb.columns, F.col("_b.j").alias(out_col))
+    return joined.select(*emb.columns, F.explode(kept).alias("_b")).select(
+        *emb.columns, F.col("_b.j").alias(out_col)
     )
 
 
@@ -892,11 +617,12 @@ def kmeans_fit(
     and results are bit-identical.
 
     ``assign_nprobe`` switches the per-iteration assignment to the
-    two-level coarse->fine ranking (cuts the N*k*dim assign flops to
-    ~N*(1+nprobe)*sqrt(k)*dim — the term that dominates when k tracks N)
-    once ``k >= TWO_LEVEL_MIN_K``; the index is rebuilt each iteration
-    from the current centroids (a k-row nested fit + one k-row collect,
-    negligible next to the corpus scan). With approximate assignment the
+    routed ranking (:func:`build_index` + :func:`route`, depth by
+    :func:`_levels`: two levels cut the N*k*dim assign flops to
+    ~N*(1+nprobe)*sqrt(k)*dim — the term that dominates when k tracks
+    N) once ``k >= TWO_LEVEL_MIN_K``; the index is re-routed each
+    iteration from the current centroids (driver-side numpy over k
+    rows, negligible next to the corpus scan). With approximate assignment the
     exact-Lloyd's monotone-inertia guarantee weakens to the ANN-kmeans
     contract (still deterministic; convergence pinned by test, not
     proof) — the default ``None`` keeps the exact path.
@@ -939,18 +665,15 @@ def kmeans_fit(
     )
     if driver_train is None:
         driver_train = _driver_train_auto(sample_target, train_sample_n, k)
-    if driver_train:
-        ids, V = _collect_ids_matrix(
-            train_sample(emb, id_col, sample_target, n=train_sample_n),
-            id_col,
-            vec_col,
-        )
-        return _np_fit_loop(ids, V, k, max_iters, rel_tol)
-    slim = (
-        train_sample(emb, id_col, sample_target, n=train_sample_n)
-        .select(id_col, vec_col)
-        .persist()
+    slim = train_sample(emb, id_col, sample_target, n=train_sample_n).select(
+        id_col, vec_col
     )
+    if driver_train:
+        # projected first: only (id, vec) crosses the driver boundary,
+        # whatever else the caller's frame carries
+        ids, V = _collect_ids_matrix(slim, id_col, vec_col)
+        return _np_fit_loop(ids, V, k, max_iters, rel_tol)
+    slim.persist()
     try:
         return _fit_loop(
             slim, k, max_iters, id_col, vec_col, rel_tol, assign_nprobe
@@ -970,48 +693,22 @@ def _fit_loop(
 ) -> tuple[list[list[float]], list[float]]:
     centroids = kmeans_init(slim, k, id_col=id_col, vec_col=vec_col)
     dim = len(centroids[0])
-    two_level = assign_nprobe is not None and k >= TWO_LEVEL_MIN_K
-    three_level = assign_nprobe is not None and k >= THREE_LEVEL_MIN_K
-    coarse_reuse: list[list[float]] | None = None
-    mid_reuse: list[list[float]] | None = None
+    levels = 1 if assign_nprobe is None else _levels(k)
+    nprobe = _tier_nprobe(assign_nprobe, levels)
+    reuse: list[list[float]] | None = None
     inertia_hist: list[float] = []
     for _ in range(max_iters):
-        if three_level:
-            # routing tiers are trained ONCE (first iteration) and the
-            # mid level is reused: later iterations only re-route the
-            # drifted fine centroids + refit the tiny top tier (numpy
-            # over K^(2/3) rows — routing structure, not correctness)
-            idx3 = build_three_level_index(
-                list(enumerate(centroids)), mid_vecs=mid_reuse
-            )
-            mid_reuse = [
-                v
-                for _, v, _ in sorted(
-                    (e for mem in idx3[1].values() for e in mem),
-                    key=lambda x: x[0],
-                )
-            ]
-            # nprobe+1: the doubly-nested prune costs ~one probe step of
-            # routing agreement (same widening as the cosine dispatch in
-            # similarity._assign_two_level_centroids)
-            assigned = kmeans_assign_three_level(
-                slim, idx3, vec_col=vec_col, nprobe=assign_nprobe + 1
-            )
-        elif two_level:
-            # the coarse level is trained ONCE (first iteration) and
+        index = build_index(list(enumerate(centroids)), levels, reuse=reuse)
+        if levels > 1:
+            # the tier above fine is trained ONCE (first iteration) and
             # reused: later iterations only re-route the drifted fine
-            # centroids (one small job + K-row collect instead of a
-            # nested fit per iteration — routing structure, not
-            # correctness)
-            idx = build_two_level_index(
-                list(enumerate(centroids)), coarse_vecs=coarse_reuse
-            )
-            coarse_reuse = [v for _, v, _ in idx[0]]
-            assigned = kmeans_assign_two_level(
-                slim, idx, vec_col=vec_col, nprobe=assign_nprobe
-            )
-        else:
-            assigned = kmeans_assign(slim, centroids, vec_col=vec_col)
+            # centroids (+ refit any tiny tier above it) — routing
+            # structure, not correctness
+            above = index[-2]
+            if isinstance(above, dict):
+                above = [e for mem in above.values() for e in mem]
+            reuse = [v for _, v, _ in sorted(above, key=lambda e: e[0])]
+        assigned = route(slim, index, nprobe=nprobe, vec_col=vec_col)
         # `assigned` is consumed by exactly ONE action per iteration
         # (the stats collect below), so persisting it would add cache
         # write traffic without saving any recomputation.

@@ -41,8 +41,7 @@ from pyspark.sql.window import Window
 
 from ..sources.readers import load_table
 from .similarity import (
-    _assign_multi_centroids,
-    _assign_two_level_centroids,
+    _assign_routed,
     _cosine_pre,
     _cosine_sql,
     _norm2,
@@ -252,7 +251,7 @@ def knn_label_noise_ivf_df(
     pinned in tests/test_labelqa.py); the flag exists so the parity
     stays testable."""
     emb = labeled
-    qry = _assign_multi_centroids(
+    qry = _assign_routed(
         emb.select("vec_id", "embedding", "norm2"), centroids, n_keep=nprobe
     ).join(emb.select("vec_id", "label"), "vec_id").select(
         F.col("vec_id").alias("a_id"),
@@ -261,8 +260,8 @@ def knn_label_noise_ivf_df(
         F.col("label").alias("a_label"),
         "centroid_id",
     )
-    cand = _assign_two_level_centroids(
-        emb.select("vec_id", "embedding", "norm2"), centroids, 2
+    cand = _assign_routed(
+        emb.select("vec_id", "embedding", "norm2"), centroids, nprobe=2
     ).join(emb.select("vec_id", "label"), "vec_id").select(
         F.col("vec_id").alias("b_id"),
         F.col("embedding").alias("b_vec"),

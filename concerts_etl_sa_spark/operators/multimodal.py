@@ -873,13 +873,6 @@ def _embed_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def media_near_dup(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.99
-) -> DataFrame:
-    """L4 -> L2 composition over the synthesized media table."""
-    return media_near_dup_df(media_table(spark, sf_dir), threshold)
-
-
 def media_near_dup_df(media: DataFrame, threshold: float = 0.99) -> DataFrame:
     """L4 -> L2 composition: decode-stub embeddings fed through the
     sign-LSH near-dup shape (bucket on the signs of the first 8

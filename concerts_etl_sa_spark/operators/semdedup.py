@@ -49,7 +49,7 @@ from ..sources.readers import load_table
 from ._cachescope import begin_scope, scoped_persist
 from .similarity import (
     _assign_buckets,
-    _assign_two_level_centroids,
+    _assign_routed,
     _cosine_pre,
     _cosine_sql,
     _dot,
@@ -259,7 +259,6 @@ def _assigned_frame(
     centroids: DataFrame,
     scope: str,
     assign_nprobe: int | None = None,
-    assign_coarse_k: int | None = None,
 ) -> DataFrame:
     """Scope-persisted (vec_id, nemb, centroid_id, cent_cos) assignment
     frame — the ONE definition both keep-rule variants build on (a
@@ -267,20 +266,17 @@ def _assigned_frame(
     invariant). ``nemb`` is the unit vector (embedding / sqrt(norm2),
     doubles), normalized ONCE here so the quadratic pair stage scores
     with a bare dot — see :func:`_dup_pairs`. ``assign_nprobe`` engages
-    the two-level coarse->fine assignment (the shared
-    ``similarity._assign_two_level_centroids`` — one definition with the
-    IVF candidate side, same rationale as the shared flat ranking)
-    for the routing stage only; cent_cos is recomputed with the shared
-    exact formula either way."""
+    the routed assignment (the shared ``similarity._assign_routed`` —
+    one definition with the IVF candidate side, same rationale as the
+    shared flat ranking) for the routing stage only; cent_cos is
+    recomputed with the shared exact formula either way."""
     # _nrm is computed BELOW the centroid-join barrier so the divide
     # lambda sees a per-row ATTRIBUTE: hoisting it as a sibling
     # withColumn would be undone by CollapseProject (the alias gets
     # re-inlined into the lambda and sqrt runs once per ELEMENT — 64x).
     # FP-identical: same correctly-rounded sqrt, same per-element divide.
     assigned0 = (
-        _assign_two_level_centroids(
-            emb, centroids, assign_nprobe, assign_coarse_k
-        )
+        _assign_routed(emb, centroids, nprobe=assign_nprobe)
         if assign_nprobe is not None
         else _assign_buckets(emb, centroids, n_keep=1)
     )
@@ -310,7 +306,6 @@ def semdedup_df(
     max_cluster_size: int | None = None,
     heavy_bucket_mode: str = "star",
     assign_nprobe: int | None = None,
-    assign_coarse_k: int | None = None,
 ) -> DataFrame:
     """df-based core over any (vec_id, embedding[, norm2]) frame and a
     (centroid_id, centroid_vec, c_n2) centroid frame.
@@ -329,9 +324,7 @@ def semdedup_df(
     # persisted: the pair self-join consumes it on both legs, and the
     # assignment projection (K x DIM dot products per row) is the
     # CPU-heavy stage — the standard materialize-the-index trade
-    assigned = _assigned_frame(
-        emb, centroids, "semdedup", assign_nprobe, assign_coarse_k
-    )
+    assigned = _assigned_frame(emb, centroids, "semdedup", assign_nprobe)
     # persisted: ``nb`` consumes dup TWICE (the two union legs), so an
     # unpersisted dup re-runs the ENTIRE quadratic pair self-join per
     # leg — the round-11 125x stage attribution measured that join at
@@ -394,7 +387,6 @@ def semdedup_groups_df(
     max_cluster_size: int | None = None,
     heavy_bucket_mode: str = "star",
     assign_nprobe: int | None = None,
-    assign_coarse_k: int | None = None,
 ) -> DataFrame:
     """The paper's EXACT per-group rule: duplicate groups are connected
     components of the tau-graph (within clusters), and each group keeps
@@ -412,7 +404,7 @@ def semdedup_groups_df(
         emb = emb.withColumn("norm2", _norm2("embedding"))
     begin_scope("semdedup_groups")
     assigned = _assigned_frame(
-        emb, centroids, "semdedup_groups", assign_nprobe, assign_coarse_k
+        emb, centroids, "semdedup_groups", assign_nprobe
     )
     dup = scoped_persist(
         "semdedup_groups",

@@ -382,139 +382,56 @@ def _assign_buckets(emb: DataFrame, centroids: DataFrame, n_keep: int) -> DataFr
     )
 
 
-def _assign_two_level_centroids(
+def _assign_routed(
     emb: DataFrame,
     centroids: DataFrame,
-    nprobe: int,
-    coarse_k: int | None = None,
+    n_keep: int = 1,
+    nprobe: int | None = None,
 ) -> DataFrame:
-    """Two-level (coarse->fine) nearest-centroid assignment under the
-    SAME rounded-cosine ranking as :func:`_assign_buckets` — the ONE
-    definition the IVF candidate side and the semdedup paths share (a
-    drift between them would silently diverge their approximation
-    contracts). Scale path for K ∝ N, where flat assignment's N*K*dim
-    flops grow super-linearly; ranks ~sqrt(K) coarse + nprobe groups'
-    fine members per row instead of K. APPROXIMATE (the true nearest
-    fine centroid may sit in an unprobed group): agreement and
-    keep-rate parity vs the flat form are pytest-pinned; the flat form
-    stays the oracle path. Falls back to flat below TWO_LEVEL_MIN_K,
-    where the index build (K-row job latency) costs more than it saves
-    — the operator self-selects the measured winner by K and small-K
-    results are bit-identical to flat. Returns (vec_id, embedding,
-    norm2, centroid_id), the `_assign_buckets(n_keep=1)` shape."""
-    from .kmeans import (
-        THREE_LEVEL_MIN_K,
-        TWO_LEVEL_MIN_K,
-        build_three_level_index,
-        build_two_level_index,
-        kmeans_assign_three_level,
-        kmeans_assign_two_level,
-    )
+    """Each vector's ``n_keep`` nearest centroids under the SAME
+    rounded-cosine ranking as :func:`_assign_buckets`, routed through a
+    ``kmeans.build_index`` tree whose depth follows K — the ONE
+    definition the IVF candidate side, the semdedup paths and labelqa's
+    query and candidate legs share (a drift between them would silently
+    diverge their approximation contracts). Scale path for K ∝ N, where
+    flat assignment's N*K*dim flops grow super-linearly.
+
+    Flat ``_assign_buckets`` below TWO_LEVEL_MIN_K, where the index
+    build costs more than it saves (small-K results are bit-identical
+    to flat); two levels up to THREE_LEVEL_MIN_K; three above, with the
+    probe widened by one (``kmeans._tier_nprobe``). APPROXIMATE above
+    the flat tier: the true nearest centroid may sit in an unprobed
+    group, so agreement and keep-rate parity vs flat are pytest-pinned
+    and the flat form stays the oracle path. ``nprobe`` defaults to
+    ``max(2, n_keep)``: only probed groups' members can be kept, so a
+    caller keeping n_keep centroids must search at least that many
+    groups (round-11 advisory — ``(n_keep+1)//2`` probed just 2 groups
+    for the labelqa default n_keep=4). Returns (vec_id, embedding,
+    norm2, centroid_id), the ``_assign_buckets`` shape."""
+    from .kmeans import _levels, _tier_nprobe, build_index, route
 
     # K rows to the driver — bounded (K ~ N/60 under the auto rule),
     # the same sync-point class as the trainer's own centroid state.
     rows = centroids.select("centroid_id", "centroid_vec").collect()
-    if len(rows) < TWO_LEVEL_MIN_K:
-        return _assign_buckets(emb, centroids, n_keep=1)
-    if len(rows) >= THREE_LEVEL_MIN_K and coarse_k is None:
-        # round-11: above THREE_LEVEL_MIN_K the sqrt(K) coarse ranking
-        # itself dominates — route through the K^(1/3)-ary tree instead
-        # (same approximation contract, one tier deeper; selected by
-        # measurement like the two-level threshold). The probe widens by
-        # ONE: the doubly-nested prune costs ~one probe step of routing
-        # agreement (measured at K=400: 3-level nprobe=3 holds the
-        # two-level nprobe=2 quality bars — keep-rate delta 0.027,
-        # pair recall 0.715 — while nprobe=2 falls to 0.59 recall), and
-        # even widened the candidate count is ~(1+2*(nprobe+1))*K^(1/3)
-        # vs (1+nprobe)*sqrt(K), still ~1.7x fewer at the threshold.
-        idx3 = build_three_level_index(
-            [(r["centroid_id"], r["centroid_vec"]) for r in rows],
-            metric="cosine",
-        )
-        return kmeans_assign_three_level(
-            emb,
-            idx3,
-            out_col="centroid_id",
-            nprobe=nprobe + 1,
-            metric="cosine",
-            norm2_col="norm2",
-            score_col="_neg_cos",
-        ).select("vec_id", "embedding", "norm2", "centroid_id")
-    idx = build_two_level_index(
-        [(r["centroid_id"], r["centroid_vec"]) for r in rows],
-        coarse_k=coarse_k,
-        metric="cosine",
-    )
-    return kmeans_assign_two_level(
-        emb,
-        idx,
-        out_col="centroid_id",
-        nprobe=nprobe,
-        metric="cosine",
-        norm2_col="norm2",
-        score_col="_neg_cos",
-    ).select("vec_id", "embedding", "norm2", "centroid_id")
-
-
-def _assign_multi_centroids(
-    emb: DataFrame,
-    centroids: DataFrame,
-    n_keep: int,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """Multi-keep nearest-centroid assignment with the SAME K-aware
-    routing dispatch as :func:`_assign_two_level_centroids`: flat
-    ``_assign_buckets`` below TWO_LEVEL_MIN_K (bit-identical small-K
-    results), the two-level multi-keep ranking above it, and the
-    three-level tree at THREE_LEVEL_MIN_K (probe widened by one, the
-    single-keep dispatcher's own rule). The all-vectors-as-queries kNN
-    paths need this — their query side is N-sized, so the flat N*K*dim
-    ranking is exactly the term the routing tiers kill (round-11
-    labelqa finding). ``nprobe`` defaults to ``max(2, n_keep)``: the
-    fine ranking can only keep centroids from probed groups, so a
-    caller keeping n_keep fine centroids must search at least that
-    many groups (round-11 advisory — the old ``(n_keep+1)//2`` probed
-    just 2 groups for the labelqa default n_keep=4)."""
-    from .kmeans import (
-        THREE_LEVEL_MIN_K,
-        TWO_LEVEL_MIN_K,
-        build_three_level_index,
-        build_two_level_index,
-        kmeans_assign_three_level_multi,
-        kmeans_assign_two_level_multi,
-    )
-
+    levels = _levels(len(rows))
+    if levels == 1:
+        return _assign_buckets(emb, centroids, n_keep=n_keep)
     if nprobe is None:
         nprobe = max(2, n_keep)
-    rows = centroids.select("centroid_id", "centroid_vec").collect()
-    if len(rows) < TWO_LEVEL_MIN_K:
-        return _assign_buckets(emb, centroids, n_keep=n_keep)
-    if len(rows) >= THREE_LEVEL_MIN_K:
-        idx3 = build_three_level_index(
-            [(r["centroid_id"], r["centroid_vec"]) for r in rows],
-            metric="cosine",
-        )
-        return kmeans_assign_three_level_multi(
-            emb,
-            idx3,
-            out_col="centroid_id",
-            n_keep=n_keep,
-            nprobe=nprobe + 1,
-            metric="cosine",
-            norm2_col="norm2",
-        ).select("vec_id", "embedding", "norm2", "centroid_id")
-    idx = build_two_level_index(
+    index = build_index(
         [(r["centroid_id"], r["centroid_vec"]) for r in rows],
+        levels,
         metric="cosine",
     )
-    return kmeans_assign_two_level_multi(
+    return route(
         emb,
-        idx,
-        out_col="centroid_id",
+        index,
         n_keep=n_keep,
-        nprobe=nprobe,
+        nprobe=_tier_nprobe(nprobe, levels),
         metric="cosine",
+        out_col="centroid_id",
         norm2_col="norm2",
+        score_col="_neg_cos",
     ).select("vec_id", "embedding", "norm2", "centroid_id")
 
 
@@ -544,8 +461,8 @@ def _ivf_topk(
     Q-sized, and its nprobe slice defines the search contract."""
     cand_src = emb.filter(F.col("vec_id") >= N_QUERIES)
     if assign_nprobe is not None:
-        cand_assigned = _assign_two_level_centroids(
-            cand_src, centroids, assign_nprobe
+        cand_assigned = _assign_routed(
+            cand_src, centroids, nprobe=assign_nprobe
         )
     else:
         cand_assigned = _assign_buckets(cand_src, centroids, n_keep=1)

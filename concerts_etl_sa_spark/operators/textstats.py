@@ -71,53 +71,6 @@ FROM (SELECT doc_id, text, {_tokens_sql('text')} AS toks FROM documents)
 """
 
 
-def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-style pre-tokenizer counts (L3 'token counting: whitespace + a
-    BPE-ish regex'): GPT-2-shaped segment classes — optional leading space
-    + letter runs / digit runs / punctuation runs — RE2-safe so Spark
-    (Java regex) and DuckDB (RE2) extract identical token streams.
-
-    A real tokenizer's merge table would sit behind a pandas UDF; the
-    pre-tokenizer segmentation is the distributed-scan-shaped part and a
-    tight upper bound on BPE token count.
-    """
-    pat = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+"
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.col("text"), F.lit(f"({pat})"), 1
-        ).alias("pieces"),
-        _tokens(F.col("text")).alias("ws_toks"),
-    )
-    pieces = F.col("pieces")
-    ws_toks = F.col("ws_toks")
-    return d.select(
-        "doc_id",
-        F.size(pieces).alias("n_bpe_tokens"),
-        F.size(ws_toks).alias("n_ws_tokens"),
-        F.round(
-            F.size(pieces).cast("double")
-            / F.greatest(F.size(ws_toks), F.lit(1)),
-            6,
-        ).alias("bpe_per_word"),
-    )
-
-
-BPE_TOKEN_COUNT_SQL = f"""
-SELECT doc_id,
-  len(pieces) AS n_bpe_tokens,
-  len(ws) AS n_ws_tokens,
-  round(CAST(len(pieces) AS DOUBLE) / greatest(len(ws), 1), 6) AS bpe_per_word
-FROM (
-  SELECT doc_id,
-    regexp_extract_all(text, '( ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s]+)', 1)
-      AS pieces,
-    {_tokens_sql('text')} AS ws
-  FROM documents
-)
-"""
-
-
 def quality_cols(text=None, toks=None) -> dict[str, "F.Column"]:
     """Column builders for the quality heuristic — shared by the oracle
     query and the corpus-curation plan (one source of truth for the

@@ -22,6 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..logging_json import log_json
 from ..operators.consolidate import consolidate
 from ..operators.fixtures import AS_OF, dice_events, shotgun_events
 from ..schemas import NORMALIZED_EVENT
@@ -56,9 +57,9 @@ def retry_source(fn, *args, attempts: int = RETRY_ATTEMPTS,
         except Exception as exc:  # noqa: BLE001 — retry is the operator
             if attempt == attempts:
                 raise
-            print(
-                f'{{"level": "warning", "msg": "source attempt {attempt} '
-                f'failed, retrying in {delay:g}s: {exc}"}}'
+            log_json(
+                "warning", "source attempt failed, retrying",
+                attempt=attempt, delay_s=delay, error=str(exc)[:500],
             )
             sleep(delay)
             delay = min(delay * 2, max_delay)
@@ -71,7 +72,7 @@ def _safe_source(spark: SparkSession, fn, events: DataFrame,
     try:
         return retry_source(fn, events, sleep=sleep)
     except Exception as exc:  # noqa: BLE001 — per-source isolation is the op
-        print(f'{{"level": "error", "msg": "source failed: {exc}"}}')
+        log_json("error", "source failed", error=str(exc)[:500])
         return spark.createDataFrame([], NORMALIZED_EVENT)
 
 

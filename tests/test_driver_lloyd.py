@@ -177,6 +177,26 @@ def test_driver_train_requires_no_nprobe_interaction(spark):
     _close(a, b)
 
 
+def test_driver_train_transfers_only_id_and_vec(spark, monkeypatch):
+    """The driver-side fit projects to (id, vec) BEFORE the Arrow
+    transfer: a wide payload column on the caller's frame must not
+    cross the driver boundary."""
+    emb = load_table(spark, SF_DIR, "embeddings").withColumn(
+        "payload", F.repeat(F.lit("x"), 4096)
+    )
+    cls = type(emb)
+    orig = cls.toArrow
+    crossed = []
+
+    def spy(self):
+        crossed.append(self.columns)
+        return orig(self)
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    kmeans_fit(emb, k=4, max_iters=2, driver_train=True)
+    assert crossed == [["vec_id", "embedding"]], crossed
+
+
 def test_opq_dists_bit_equal_to_broadcast_form():
     """r15: opq_rotation's per-centroid distance slices must be
     BIT-EQUAL to the (n, k, sub) broadcast form they replaced — same

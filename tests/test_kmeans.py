@@ -8,9 +8,10 @@ import math
 from pyspark.sql import functions as F
 
 from concerts_etl_sa_spark.operators.kmeans import (
+    build_index,
     centroids_df,
-    kmeans_assign,
     kmeans_fit,
+    route,
 )
 from concerts_etl_sa_spark.sources.readers import load_table
 
@@ -45,7 +46,7 @@ def test_kmeans_recovers_separated_clusters(spark):
         assert d < 1.0, (c, centers)
         used.add(i)
     # assignments are pure: each true cluster maps to one fitted cluster
-    assigned = kmeans_assign(df, fitted)
+    assigned = route(df, build_index(list(enumerate(fitted)), 1))
     purity = (
         assigned.groupBy("true_cluster")
         .agg(F.countDistinct("cluster").alias("n"))
@@ -112,7 +113,7 @@ def test_kmeans_assign_plan_size_flat_in_k(spark):
     sizes = {}
     for k in (8, 256):
         cents = [[float((j * 13 + d * 7) % 97) / 97.0 for d in range(4)] for j in range(k)]
-        a = kmeans_assign(df, cents)
+        a = route(df, build_index(list(enumerate(cents)), 1))
         sizes[k] = len(a._jdf.queryExecution().executedPlan().toString())
         assert a.count() == 90
     assert sizes[256] < sizes[8] + 2000, sizes

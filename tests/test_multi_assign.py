@@ -1,5 +1,5 @@
 """Multi-keep K-aware assignment routing (round-12: the ADVICE items on
-``_assign_multi_centroids``): probe-width default, two-level and
+the multi-keep ``_assign_routed``): probe-width default, two-level and
 three-level dispatch, total-probe bit-exactness, and the measured
 kept-set agreement floors at real K.
 
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from concerts_etl_sa_spark.operators import kmeans as KM
 from concerts_etl_sa_spark.operators.similarity import (
     _assign_buckets,
-    _assign_multi_centroids,
+    _assign_routed,
     _emb_normed,
     _norm2,
 )
@@ -73,7 +73,7 @@ def test_multi_two_level_total_probe_bit_exact(spark):
     emb, cents = _k400_setup(spark)
     flat = _kept_sets(_assign_buckets(emb, cents, n_keep=N_KEEP))
     total = _kept_sets(
-        _assign_multi_centroids(emb, cents, N_KEEP, nprobe=10**6)
+        _assign_routed(emb, cents, N_KEEP, nprobe=10**6)
     )
     assert total == flat
 
@@ -87,11 +87,11 @@ def test_multi_two_level_default_probe_floor_and_beats_old(spark):
     emb, cents = _k400_setup(spark)
     flat = _kept_sets(_assign_buckets(emb, cents, n_keep=N_KEEP))
     old = _overlap(
-        _kept_sets(_assign_multi_centroids(emb, cents, N_KEEP, nprobe=2)),
+        _kept_sets(_assign_routed(emb, cents, N_KEEP, nprobe=2)),
         flat,
     )
     new = _overlap(
-        _kept_sets(_assign_multi_centroids(emb, cents, N_KEEP)), flat
+        _kept_sets(_assign_routed(emb, cents, N_KEEP)), flat
     )
     assert new >= 0.50, new
     assert new > old, (new, old)
@@ -108,11 +108,11 @@ def test_multi_three_level_dispatch_and_total_probe(spark, monkeypatch):
     emb, cents = _k400_setup(spark)
     flat = _kept_sets(_assign_buckets(emb, cents, n_keep=N_KEEP))
     total = _kept_sets(
-        _assign_multi_centroids(emb, cents, N_KEEP, nprobe=10**6)
+        _assign_routed(emb, cents, N_KEEP, nprobe=10**6)
     )
     assert total == flat
-    a = _kept_sets(_assign_multi_centroids(emb, cents, N_KEEP))
-    b = _kept_sets(_assign_multi_centroids(emb, cents, N_KEEP))
+    a = _kept_sets(_assign_routed(emb, cents, N_KEEP))
+    b = _kept_sets(_assign_routed(emb, cents, N_KEEP))
     assert a == b
     assert _overlap(a, flat) >= 0.45, _overlap(a, flat)
 
@@ -124,7 +124,7 @@ def test_multi_flat_fallback_below_min_k(spark):
     emb, _ = _k400_setup(spark)
     cents8 = _mod8(emb)
     flat = _kept_sets(_assign_buckets(emb, cents8, n_keep=N_KEEP))
-    multi = _kept_sets(_assign_multi_centroids(emb, cents8, N_KEEP))
+    multi = _kept_sets(_assign_routed(emb, cents8, N_KEEP))
     assert multi == flat
 
 

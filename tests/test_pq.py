@@ -189,7 +189,7 @@ def test_ivfpq_trained_deterministic(spark):
 def test_pq_plan_size_flat_in_codebook(spark):
     """Codebook floats travel as broadcast data, not plan literals: a
     16x larger trained codebook (k=16 -> 256 entries per subspace) must
-    not grow the executed plan (same device as kmeans_assign)."""
+    not grow the executed plan (same device as kmeans.route)."""
     from concerts_etl_sa_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")

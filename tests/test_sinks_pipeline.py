@@ -300,3 +300,26 @@ def test_safe_source_retries_then_degrades(spark):
     out = _safe_source(spark, dead, ev, sleep=lambda _s: None)
     assert out.count() == 0
     assert "provider" in out.columns  # NORMALIZED_EVENT schema
+
+
+def test_source_failure_logs_are_json_on_stderr(spark, capsys):
+    """Retry and failure logs go through log_json on stderr (stdout is
+    left to the caller's result): an exception text carrying a quote
+    and a newline must still give one parseable JSON record per line."""
+    from concerts_etl_sa_spark.plans.pipeline import _safe_source
+
+    text = 'provider said "no"\nsecond line'
+
+    def dead(events):
+        raise RuntimeError(text)
+
+    _safe_source(spark, dead, None, sleep=lambda _s: None)
+    out, err = capsys.readouterr()
+    assert out == ""
+    recs = [json.loads(line) for line in err.splitlines()]
+    assert [r["level"] for r in recs] == ["warning", "warning", "error"]
+    assert [(r["attempt"], r["delay_s"]) for r in recs[:2]] == [
+        (1, 1.0),
+        (2, 2.0),
+    ]
+    assert all(r["error"] == text for r in recs)

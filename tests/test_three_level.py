@@ -16,11 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from concerts_etl_sa_spark.operators import kmeans as KM
-from concerts_etl_sa_spark.operators.kmeans import (
-    build_three_level_index,
-    kmeans_assign,
-    kmeans_assign_three_level,
-)
+from concerts_etl_sa_spark.operators.kmeans import build_index, route
 
 from .conftest import SF_DIR
 from .test_kmeans import _clustered
@@ -43,7 +39,7 @@ def _k400_cents(spark):
     )
 
 
-def test_three_level_index_structure():
+def test_three_level_tree_structure():
     """Every fine centroid lands in exactly one fine group; every mid id
     referenced by a top entry exists in the fine map; every top/mid is
     live — the construction guarantee that keeps ANSI element_at
@@ -52,7 +48,7 @@ def test_three_level_index_structure():
         (j, [float((j * 13 + d * 7) % 97) / 97.0 for d in range(4)])
         for j in range(500)
     ]
-    top, mids, groups = build_three_level_index(cents, metric="cosine")
+    top, mids, groups = build_index(cents, 3, metric="cosine")
     assert set(mids) == {t for t, _, _ in top}
     mid_ids = [m for mem in mids.values() for m, _, _ in mem]
     assert sorted(mid_ids) == sorted(groups)  # bijection mids <-> groups
@@ -71,16 +67,16 @@ def test_three_level_exact_on_separated_blobs(spark):
         [10.0, 9.9, 0.0, 0.1],
         [0.0, 0.1, 9.9, 10.0],
     ]
-    idx = build_three_level_index(
-        list(enumerate(cents)), mid_k=3, top_k=2
-    )
+    idx = build_index(list(enumerate(cents)), 3)
     flat = {
         r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(df, cents).select("vec_id", "cluster").collect()
+        for r in route(df, build_index(list(enumerate(cents)), 1))
+        .select("vec_id", "cluster")
+        .collect()
     }
     three = {
         r["vec_id"]: r["cluster"]
-        for r in kmeans_assign_three_level(df, idx, nprobe=3)
+        for r in route(df, idx, nprobe=3)
         .select("vec_id", "cluster")
         .collect()
     }
@@ -110,15 +106,16 @@ def test_three_level_agreement_monotone_and_total_probe_exact(spark):
         .collect()
     }
     rows = cents.select("centroid_id", "centroid_vec").collect()
-    idx = build_three_level_index(
+    idx = build_index(
         [(r["centroid_id"], r["centroid_vec"]) for r in rows],
+        3,
         metric="cosine",
     )
 
     def agreement(nprobe):
         three = {
             r["vec_id"]: r["centroid_id"]
-            for r in kmeans_assign_three_level(
+            for r in route(
                 emb,
                 idx,
                 out_col="centroid_id",
@@ -190,8 +187,8 @@ def test_three_level_assign_plan_flat_in_k(spark):
             (j, [float((j * 13 + d * 7) % 97) / 97.0 for d in range(4)])
             for j in range(k)
         ]
-        idx = build_three_level_index(cents)
-        a = kmeans_assign_three_level(df, idx, nprobe=2)
+        idx = build_index(cents, 3)
+        a = route(df, idx, nprobe=2)
         sizes[k] = len(a._jdf.queryExecution().executedPlan().toString())
         assert a.count() == 90
     assert sizes[512] < sizes[64] + 2000, sizes
@@ -226,14 +223,14 @@ def test_three_level_mid_reuse_routing_only():
         (j, [float((j * 29 + d * 11) % 83) / 83.0 for d in range(4)])
         for j in range(300)
     ]
-    _, mids1, groups1 = build_three_level_index(cents)
-    mid_vecs = [
+    _, mids1, groups1 = build_index(cents, 3)
+    reuse = [
         v
         for _, v, _ in sorted(
             (e for mem in mids1.values() for e in mem), key=lambda x: x[0]
         )
     ]
-    _, _, groups2 = build_three_level_index(cents, mid_vecs=mid_vecs)
+    _, _, groups2 = build_index(cents, 3, reuse=reuse)
     part1 = {frozenset(j for j, _, _ in mem) for mem in groups1.values()}
     part2 = {frozenset(j for j, _, _ in mem) for mem in groups2.values()}
     assert part1 == part2

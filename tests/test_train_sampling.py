@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 
 from concerts_etl_sa_spark.operators import pq
 from concerts_etl_sa_spark.operators.kmeans import (
-    kmeans_assign,
+    build_index,
     kmeans_fit,
+    route,
     train_sample,
 )
 from concerts_etl_sa_spark.sources.readers import load_table
@@ -72,7 +73,7 @@ def test_kmeans_fit_sampled_deterministic_and_competitive(spark):
 
     def corpus_inertia(centroids):
         return (
-            kmeans_assign(emb, centroids)
+            route(emb, build_index(list(enumerate(centroids)), 1))
             .agg(F.sum("_sq_dist").alias("i"))
             .collect()[0]["i"]
         )

@@ -16,10 +16,9 @@ from pyspark.sql import functions as F
 
 from concerts_etl_sa_spark.operators.kmeans import (
     TWO_LEVEL_MIN_K,
-    build_two_level_index,
-    kmeans_assign,
-    kmeans_assign_two_level,
+    build_index,
     kmeans_fit,
+    route,
 )
 from concerts_etl_sa_spark.operators.semdedup import semdedup_auto
 
@@ -37,14 +36,16 @@ def test_two_level_exact_on_separated_blobs(spark):
     nprobe covering the coarse candidates)."""
     _, df = _clustered(spark)
     cents = [[0.1, 0.1, 0.0, 0.0], [10.0, 9.9, 0.0, 0.1], [0.0, 0.1, 9.9, 10.0]]
-    idx = build_two_level_index(list(enumerate(cents)), coarse_k=2)
+    idx = build_index(list(enumerate(cents)), 2)
     flat = {
         r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(df, cents).select("vec_id", "cluster").collect()
+        for r in route(df, build_index(list(enumerate(cents)), 1))
+        .select("vec_id", "cluster")
+        .collect()
     }
     two = {
         r["vec_id"]: r["cluster"]
-        for r in kmeans_assign_two_level(df, idx, nprobe=2)
+        for r in route(df, idx, nprobe=2)
         .select("vec_id", "cluster")
         .collect()
     }
@@ -101,7 +102,7 @@ def test_two_level_semdedup_parity_at_real_k(spark):
     assert two.equals(two_again)
 
 
-def test_two_level_index_structure(spark):
+def test_two_level_tree_structure(spark):
     """Every fine centroid lands in exactly one group; every coarse
     entry is live (has members) — the construction guarantee that keeps
     ANSI element_at crash-free at assignment time."""
@@ -109,7 +110,7 @@ def test_two_level_index_structure(spark):
         (j, [float((j * 13 + d * 7) % 97) / 97.0 for d in range(4)])
         for j in range(80)
     ]
-    coarse, groups = build_two_level_index(cents, metric="cosine")
+    coarse, groups = build_index(cents, 2, metric="cosine")
     assert set(groups) == {g for g, _, _ in coarse}
     members = [j for mem in groups.values() for j, _, _ in mem]
     assert sorted(members) == list(range(80))
@@ -127,8 +128,8 @@ def test_two_level_assign_plan_flat_in_k(spark):
             (j, [float((j * 13 + d * 7) % 97) / 97.0 for d in range(4)])
             for j in range(k)
         ]
-        idx = build_two_level_index(cents)
-        a = kmeans_assign_two_level(df, idx, nprobe=2)
+        idx = build_index(cents, 2)
+        a = route(df, idx, nprobe=2)
         sizes[k] = len(a._jdf.queryExecution().executedPlan().toString())
         assert a.count() == 90
     assert sizes[512] < sizes[64] + 2000, sizes
@@ -191,7 +192,7 @@ def test_two_level_agreement_monotone_and_total_probe_exact(spark):
     )
     from concerts_etl_sa_spark.operators.similarity import (
         _assign_buckets,
-        _assign_two_level_centroids,
+        _assign_routed,
         _emb_normed,
         _norm2,
     )
@@ -222,7 +223,7 @@ def test_two_level_agreement_monotone_and_total_probe_exact(spark):
     def agreement(nprobe):
         two = {
             r["vec_id"]: r["centroid_id"]
-            for r in _assign_two_level_centroids(emb, cents, nprobe)
+            for r in _assign_routed(emb, cents, nprobe=nprobe)
             .select("vec_id", "centroid_id")
             .collect()
         }

@@ -5,8 +5,8 @@ ivfpq/ngram stage probes).
 
 Stages of the composition (operators/labelqa.py:knn_label_noise_ivf):
   sizing       count + centroid pick (modular rule)
-  qry_assign   _assign_multi_centroids(n_keep=nprobe) + label join
-  cand_assign  _assign_two_level_centroids(2) + label join
+  qry_assign   _assign_routed(n_keep=nprobe) + label join
+  cand_assign  _assign_routed(nprobe=2) + label join
   scored       candidate equi-join on centroid_id + pair cosine
   end_to_end   the full row (adds _noise_from_scored: top-k window,
                vote aggregation, verdict projection)
@@ -49,8 +49,7 @@ def main() -> None:
         _auto_stride,
     )
     from concerts_etl_sa_spark.operators.similarity import (
-        _assign_multi_centroids,
-        _assign_two_level_centroids,
+        _assign_routed,
         _cosine_pre,
         _norm2,
     )
@@ -84,7 +83,7 @@ def main() -> None:
         t["sizing"] = time.time() - t0
 
         t0 = time.time()
-        qry = _assign_multi_centroids(
+        qry = _assign_routed(
             emb.select("vec_id", "embedding", "norm2"),
             centroids,
             n_keep=nprobe,
@@ -99,8 +98,8 @@ def main() -> None:
         t["qry_assign"] = time.time() - t0
 
         t0 = time.time()
-        cand = _assign_two_level_centroids(
-            emb.select("vec_id", "embedding", "norm2"), centroids, 2
+        cand = _assign_routed(
+            emb.select("vec_id", "embedding", "norm2"), centroids, nprobe=2
         ).join(emb.select("vec_id", "label"), "vec_id").select(
             F.col("vec_id").alias("b_id"),
             F.col("embedding").alias("b_vec"),
