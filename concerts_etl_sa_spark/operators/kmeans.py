@@ -198,17 +198,23 @@ def _collect_ids_matrix(slim: DataFrame, id_col: str, vec_col: str):
     (guide §5): a row-collect of the same frame materializes every
     vector as a pyspark Row of boxed Python floats (~5x the bytes on
     the driver heap at the gate limit); the Arrow path lands the
-    payload as one flat buffer and reshapes. Row order is the frame's
-    partition order, identical to ``collect()``, and the float->double
-    upcast is exact — so the numpy twin sees bit-identical inputs."""
+    payload as one flat buffer and reshapes. Any list nesting is
+    flattened row-major, so a PQ ``subs`` column (m slices per row)
+    lands as (n, m*sub) for the caller to reshape. Row order is the
+    frame's partition order, identical to ``collect()``, and the
+    float->double upcast is exact — so the numpy twin sees
+    bit-identical inputs. Raises ValueError on an empty frame."""
     import numpy as np
+    import pyarrow as pa
 
     tbl = slim.toArrow()
     ids = tbl.column(id_col).to_pylist()
     if not ids:
-        raise ValueError("kmeans_fit: empty training frame")
-    la = tbl.column(vec_col).combine_chunks()
-    flat = la.flatten().to_numpy(zero_copy_only=False)
+        raise ValueError("empty training frame")
+    flat = tbl.column(vec_col).combine_chunks()
+    while pa.types.is_list(flat.type):
+        flat = flat.flatten()
+    flat = flat.to_numpy(zero_copy_only=False)
     return ids, np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
 
 
@@ -251,7 +257,11 @@ def kmeans_init(
     iterations do the rest. Same picked rows as the two-step form (min
     id per bucket is unique — ids are keys), consumed in the same
     ascending-id order; the driver twin (:func:`_np_seed_indices`)
-    parity stays pinned in tests/test_driver_lloyd.py."""
+    parity stays pinned in tests/test_driver_lloyd.py. ``vec_col`` may
+    hold nested lists (the fused PQ trainer's ``subs``): each seed comes
+    back at the same nesting, so all m subspaces seed from one pick."""
+    import numpy as np
+
     slim = emb.select(id_col, vec_col)
     got = (
         slim.groupBy(F.pmod(F.hash(id_col), F.lit(k)).alias("b"))
@@ -268,9 +278,11 @@ def kmeans_init(
     )
     if len(got) < k:  # fewer distinct buckets than k (tiny inputs)
         picked = slim.orderBy(id_col).limit(k).collect()
-        return [[float(x) for x in r[vec_col]] for r in picked[:k]]
-    got.sort(key=lambda r: r["_i"])
-    return [[float(x) for x in r["_v"]] for r in got[:k]]
+        vecs = [r[vec_col] for r in picked[:k]]
+    else:
+        got.sort(key=lambda r: r["_i"])
+        vecs = [r["_v"] for r in got[:k]]
+    return np.asarray(vecs, dtype=np.float64).tolist()
 
 
 def _rank_score(metric: str, vec, cand, n2_col):
@@ -278,8 +290,10 @@ def _rank_score(metric: str, vec, cand, n2_col):
     HOF lambda — lower is better in BOTH metrics so array_min/array_sort
     share one shape. ``sq_dist`` is the trainer's metric; ``cosine`` is
     the NEGATIVE rounded cosine, mirroring ``similarity._assign_buckets``
-    exactly (same rounding, same nanvl pin of an undefined 0/0 cosine to
-    -inf so it ranks last, same lowest-id tiebreak via struct order)."""
+    exactly (same rounding, same nanvl pin of a NaN cosine — from a NaN
+    dot — to -inf so it ranks last, same lowest-id tiebreak via struct
+    order). A zero norm raises DIVIDE_BY_ZERO at the divide under ANSI
+    mode, so nanvl never sees a 0/0."""
     if metric == "sq_dist":
         return _sq_dist_lambda(vec, cand["v"])
     from .similarity import _dot_lambda
@@ -544,30 +558,52 @@ def _np_seed_indices(ids: list[int], k: int) -> list[int]:
     return seed_pos[:k]
 
 
+def _np_sq_dists(X, C):
+    """(n, k) squared distances of rows to centroids, one centroid slice
+    at a time: the same per-(row, j) reduction tree as the (n, k, dim)
+    broadcast form (bit-equal — pinned by the r15 A/B) without its
+    rank-3 temporary (~10x faster). Shared by :func:`_np_fit_loop` and
+    the OPQ rotation's Lloyd."""
+    import numpy as np
+
+    d = np.empty((X.shape[0], C.shape[0]))
+    for j in range(C.shape[0]):
+        diff = X - C[j]
+        d[:, j] = (diff * diff).sum(1)
+    return d
+
+
+def _converged(hist: list[float], rel_tol: float) -> bool:
+    """The Lloyd loops' relative-inertia early stop: the last iteration
+    improved inertia by at most ``rel_tol`` of the one before."""
+    return len(hist) >= 2 and hist[-2] - hist[-1] <= rel_tol * max(
+        hist[-2], 1e-12
+    )
+
+
 def _np_fit_loop(
-    ids: list[int], V, k: int, max_iters: int, rel_tol: float
+    V, seed_pos: list[int], max_iters: int, rel_tol: float
 ) -> tuple[list[list[float]], list[float]]:
     """Driver-side Lloyd over the COLLECTED bounded training sample —
     the numpy twin of :func:`_fit_loop`'s flat path, mirroring its
-    control flow exactly: hash-bucket min-id init, argmin assignment
-    with lowest-j tie-break (numpy argmin's first-index rule), empty
-    clusters keep their previous centroid, inertia appended BEFORE the
-    exact-fixpoint break, then the relative-inertia early stop.
-    Differs from the distributed loop only in float-summation order
-    (numpy pairwise vs partition-ordered partial aggregation) — the
-    same noise class as the fused-vs-sequential trainer parity, pinned
-    at 1e-9 in tests/test_driver_lloyd.py."""
+    control flow exactly: seeded from the rows at ``seed_pos`` (the
+    hash-bucket min-id pick, :func:`_np_seed_indices` — computed once
+    per fit by the caller, so the PQ trainer's m subspaces share it),
+    argmin assignment with lowest-j tie-break (numpy argmin's
+    first-index rule), empty clusters keep their previous centroid,
+    inertia appended BEFORE the exact-fixpoint break, then the
+    relative-inertia early stop. Differs from the distributed loop only
+    in float-summation order (numpy pairwise vs partition-ordered
+    partial aggregation) — the same noise class as the fused-vs-
+    sequential trainer parity, pinned at 1e-9 in
+    tests/test_driver_lloyd.py."""
     import numpy as np
 
-    seed_pos = _np_seed_indices(ids, k)
     C = V[seed_pos].copy()
     n = V.shape[0]
     inertia_hist: list[float] = []
     for _ in range(max_iters):
-        d = np.empty((n, C.shape[0]))
-        for j in range(C.shape[0]):
-            diff = V - C[j]
-            d[:, j] = (diff * diff).sum(1)
+        d = _np_sq_dists(V, C)
         g = d.argmin(1)
         newC = C.copy()
         for j in range(C.shape[0]):
@@ -578,13 +614,14 @@ def _np_fit_loop(
         if np.array_equal(newC, C):
             break
         C = newC
-        if (
-            len(inertia_hist) >= 2
-            and inertia_hist[-2] - inertia_hist[-1]
-            <= rel_tol * max(inertia_hist[-2], 1e-12)
-        ):
+        if _converged(inertia_hist, rel_tol):
             break
     return [[float(x) for x in c] for c in C], inertia_hist
+
+
+# Relative-inertia early-stop threshold shared by every Lloyd loop (the
+# k-means fit's default; the PQ trainers use it as a constant).
+REL_TOL = 1e-6
 
 
 def kmeans_fit(
@@ -593,7 +630,7 @@ def kmeans_fit(
     max_iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rel_tol: float = 1e-6,
+    rel_tol: float = REL_TOL,
     assign_nprobe: int | None = None,
     train_sample_rows: int | None = None,
     train_sample_n: int | None = None,
@@ -672,7 +709,7 @@ def kmeans_fit(
         # projected first: only (id, vec) crosses the driver boundary,
         # whatever else the caller's frame carries
         ids, V = _collect_ids_matrix(slim, id_col, vec_col)
-        return _np_fit_loop(ids, V, k, max_iters, rel_tol)
+        return _np_fit_loop(V, _np_seed_indices(ids, k), max_iters, rel_tol)
     slim.persist()
     try:
         return _fit_loop(
@@ -737,10 +774,6 @@ def _fit_loop(
         if new_centroids == centroids:
             break
         centroids = new_centroids
-        if (
-            len(inertia_hist) >= 2
-            and inertia_hist[-2] - inertia_hist[-1]
-            <= rel_tol * max(inertia_hist[-2], 1e-12)
-        ):
+        if _converged(inertia_hist, rel_tol):
             break
     return centroids, inertia_hist

@@ -49,6 +49,12 @@ from .similarity import (
 
 KNN_K = 5
 
+# Query rows per tile of the Arrow pair scorer (:func:`_score_pairs_arrow`):
+# bounds each per-list float64 temporary at SCORE_BLOCK_ROWS × list size
+# (200 MB for a 100k-vector hot list). Typical lists (~60 vectors, each
+# probed by ~4x as many queries) fit in one tile.
+SCORE_BLOCK_ROWS = 256
+
 
 def _labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Labeled vectors only: rows with a NULL label have no label to
@@ -166,12 +172,21 @@ def _score_pairs_arrow(qry: DataFrame, cand: DataFrame) -> DataFrame:
     - the 6-dp ROUNDING stays in the JVM (``F.round`` on the raw
       cosine), so the rank tie-break contract never crosses engines.
 
+    Memory: a list's dense float64 temporaries (dot accumulator,
+    norms, cosines) are built SCORE_BLOCK_ROWS query rows at a time, so
+    they stay at most SCORE_BLOCK_ROWS × (list size) whatever the list
+    size: a hot IVF list of all N vectors costs SCORE_BLOCK_ROWS·N per
+    temporary, not N². The pair output itself is q×c rows by
+    definition.
+
     Returns (a_id, a_label, b_id, b_label, cosine_raw) for every
     within-list pair with a_id != b_id."""
     out_schema = (
         "a_id BIGINT, a_label INT, b_id BIGINT, b_label INT, "
         "cosine_raw DOUBLE"
     )
+    # read on the driver, shipped with the closure
+    block = SCORE_BLOCK_ROWS
 
     def score(q, c):
         import numpy as np
@@ -202,26 +217,33 @@ def _score_pairs_arrow(qry: DataFrame, cand: DataFrame) -> DataFrame:
         b_id = c.column("b_id").to_numpy(zero_copy_only=False)
         a_n2 = q.column("a_n2").to_numpy(zero_copy_only=False)
         b_n2 = c.column("b_n2").to_numpy(zero_copy_only=False)
-        # left-associative fold from a 0.0 seed — the JVM expression's
-        # exact add sequence per pair (elementwise adds commute with
-        # nothing; each += is the same IEEE double add)
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for i in range(A.shape[1]):
-            acc += A[:, i, None] * B[None, :, i]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = acc / np.sqrt(a_n2[:, None] * b_n2[None, :])
-        rows, cols = np.nonzero(a_id[:, None] != b_id[None, :])
         a_lab = q.column("a_label").to_numpy(zero_copy_only=False)
         b_lab = c.column("b_label").to_numpy(zero_copy_only=False)
-        return pa.table(
-            {
-                "a_id": pa.array(a_id[rows], pa.int64()),
-                "a_label": pa.array(a_lab[rows], pa.int32()),
-                "b_id": pa.array(b_id[cols], pa.int64()),
-                "b_label": pa.array(b_lab[cols], pa.int32()),
-                "cosine_raw": pa.array(cos[rows, cols], pa.float64()),
-            }
-        )
+        parts = []
+        for lo in range(0, A.shape[0], block):
+            blk = slice(lo, lo + block)
+            # left-associative fold from a 0.0 seed — the JVM
+            # expression's exact add sequence per pair (elementwise
+            # adds commute with nothing; each += is the same IEEE
+            # double add); tiling the query rows leaves it unchanged
+            acc = np.zeros((A[blk].shape[0], B.shape[0]))
+            for i in range(A.shape[1]):
+                acc += A[blk, i, None] * B[None, :, i]
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = acc / np.sqrt(a_n2[blk, None] * b_n2[None, :])
+            rows, cols = np.nonzero(a_id[blk, None] != b_id[None, :])
+            parts.append(
+                pa.table(
+                    {
+                        "a_id": pa.array(a_id[blk][rows], pa.int64()),
+                        "a_label": pa.array(a_lab[blk][rows], pa.int32()),
+                        "b_id": pa.array(b_id[cols], pa.int64()),
+                        "b_label": pa.array(b_lab[cols], pa.int32()),
+                        "cosine_raw": pa.array(cos[rows, cols], pa.float64()),
+                    }
+                )
+            )
+        return pa.concat_tables(parts)
 
     return (
         qry.groupBy("centroid_id")

@@ -16,8 +16,11 @@ asymmetric dot approximates cosine):
    subvectors. The oracle path derives them from FIXED data rows
    (``PQ_CODE_IDS`` — same deterministic-and-DuckDB-reproducible device
    as ``semdedup.SEMDEDUP_CENTROID_IDS``); the production path trains
-   them with per-subspace Lloyd's (:func:`pq_train`, reusing
-   ``kmeans.kmeans_fit``).
+   them with :func:`pq_train_fused` — m per-subspace Lloyd's fits run
+   as one loop on the k-means fit internals (``kmeans.kmeans_init``'s
+   seed pick, ``kmeans._np_fit_loop`` driver-side). The sequential
+   :func:`pq_train` (m ``kmeans.kmeans_fit`` calls) is the semantic
+   reference the fused trainer is tested against.
 2. **encode**: each vector's subspace slice is assigned its argmin-
    squared-distance code — a PURE PROJECTION against ONE broadcast row
    of (s, j, subvec) structs (the ``similarity._assign_buckets``
@@ -303,18 +306,37 @@ def topk_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_cosine_pq_df(emb, pq_codebook_fixed(spark, sf_dir))
 
 
+def _subs(emb: DataFrame) -> DataFrame:
+    """(vec_id, subs): each vector unit-normalized and cut into PQ_M
+    slices of PQ_SUB doubles — the training frame of the fused and the
+    oracle-form trainers. ``_nrm`` is built as a real column in its own
+    projection stage so the divide lambdas see a per-row attribute
+    (same device as semdedup._assigned_frame)."""
+    return emb.select(
+        "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
+    ).select(
+        "vec_id",
+        F.array(
+            *[
+                F.transform(
+                    F.slice("embedding", s * PQ_SUB + 1, PQ_SUB),
+                    lambda x: x.cast("double") / F.col("_nrm"),
+                )
+                for s in range(PQ_M)
+            ]
+        ).alias("subs"),
+    )
+
+
 def pq_train(
-    emb: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    max_iters: int = 3,
-    vec_col: str = "embedding",
+    emb: DataFrame, k: int = PQ_K, max_iters: int = 3
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd's codebooks over the unit-normalized slices —
-    m independent k-means fits (each a :func:`kmeans.kmeans_fit` on an
-    SUB-dim projection; the fit persists its slim frame, so each
+    PQ_M independent k-means fits (each a :func:`kmeans.kmeans_fit` on
+    an SUB-dim projection; the fit persists its slim frame, so each
     subspace is one cached scan + iterations of broadcast-HOF
-    assignment). Returns codebooks[s][j] = SUB-dim list."""
+    assignment). Returns codebooks[s][j] = SUB-dim list. The sequential
+    reference :func:`pq_train_fused` is tested against."""
     from .kmeans import kmeans_fit
 
     # persisted across the m fits: each kmeans_fit caches only its own
@@ -322,15 +344,15 @@ def pq_train(
     # 64-term norm re-run once PER SUBSPACE (m scans of a 100 TB input
     # instead of one). Released before returning.
     base = emb.select(
-        "vec_id", vec_col, _nrm(emb, vec_col).alias("_nrm")
+        "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
     ).persist()
     try:
         books: list[list[list[float]]] = []
-        for s in range(m):
+        for s in range(PQ_M):
             sub = base.select(
                 "vec_id",
                 F.transform(
-                    F.slice(vec_col, s * PQ_SUB + 1, PQ_SUB),
+                    F.slice("embedding", s * PQ_SUB + 1, PQ_SUB),
                     lambda x: x.cast("double") / F.col("_nrm"),
                 ).alias("subv"),
             )
@@ -345,11 +367,8 @@ def pq_train(
 
 def pq_train_fused(
     emb: DataFrame,
-    m: int = PQ_M,
     k: int = PQ_K,
     max_iters: int = 3,
-    vec_col: str = "embedding",
-    rel_tol: float = 1e-6,
     train_sample_rows: int | None = None,
     train_sample_n: int | None = None,
     driver_train: bool | None = None,
@@ -372,10 +391,11 @@ def pq_train_fused(
     fixed-point OR relative-inertia early stop, each subspace freezing
     independently; a frozen subspace's stats are simply ignored). The
     seed ids are id-derived (hash buckets), hence IDENTICAL across
-    subspaces — one collect seeds all m books. Results match
-    :func:`pq_train` up to floating-point aggregation order (the fused
-    job sums partials in a different partition order; parity is pinned
-    by test at 1e-9, determinism exactly).
+    subspaces — one :func:`kmeans.kmeans_init` pass over the nested
+    ``subs`` column seeds all m books. Results match :func:`pq_train`
+    up to floating-point aggregation order (the fused job sums partials
+    in a different partition order; parity is pinned by test at 1e-9,
+    determinism exactly).
 
     ``train_sample_rows`` bounds the training set via
     :func:`kmeans.train_sample` (the FAISS max-points-per-centroid
@@ -385,57 +405,53 @@ def pq_train_fused(
     ``None`` trains exactly as before (the pq_train parity contract);
     below the cap the thinning filter short-circuits bit-identically.
 
-    ``driver_train`` collects the bounded sample ONCE and runs all m
-    Lloyd loops locally in numpy (the :func:`opq_rotation` device,
-    extended to codebook training — FAISS itself trains codebooks on
-    the in-RAM sample): one job instead of 1 init + max_iters fused
-    jobs. The default ``None`` dispatches by MEASURED size exactly like
-    :func:`kmeans.kmeans_fit` (r16): driver-side iff the training set
-    is provably at most ``kmeans.DRIVER_TRAIN_MAX_ROWS`` rows — via the
-    thinning arithmetic or the caller's ``train_sample_n`` count — else
-    the distributed fused loop runs unchanged. The subspace slices and
-    unit normalization are computed by the ENGINE before the collect
-    (one Arrow transfer), so the init books are bit-identical to the
-    distributed loop's and iterations differ only by float-summation
-    order (parity pinned in tests/test_driver_lloyd.py, same class as
-    fused-vs-sequential)."""
-    from .kmeans import _driver_train_auto, train_sample
+    ``driver_train`` collects the bounded sample ONCE (one Arrow
+    transfer, ``kmeans._collect_ids_matrix``) and runs the k-means
+    driver loop ``kmeans._np_fit_loop`` once per subspace (the
+    :func:`opq_rotation` device, extended to codebook training — FAISS
+    itself trains codebooks on the in-RAM sample): one job instead of
+    1 init + max_iters fused jobs. The default ``None`` dispatches by
+    MEASURED size exactly like :func:`kmeans.kmeans_fit` (r16):
+    driver-side iff the training set is provably at most
+    ``kmeans.DRIVER_TRAIN_MAX_ROWS`` rows — via the thinning arithmetic
+    or the caller's ``train_sample_n`` count — else the distributed
+    fused loop runs. The subspace slices and unit normalization are
+    computed by the ENGINE before the collect, and the seed rows come
+    from one murmur3-twin pick per fit, so the init books are
+    bit-identical to the distributed loop's and iterations differ only
+    by float-summation order (parity pinned in
+    tests/test_driver_lloyd.py, same class as fused-vs-sequential)."""
+    from .kmeans import (
+        REL_TOL,
+        _collect_ids_matrix,
+        _driver_train_auto,
+        _np_fit_loop,
+        _np_seed_indices,
+        train_sample,
+    )
 
-    # _nrm is built as a real column in its own projection stage so the
-    # divide lambdas see a per-row attribute (same device as
-    # semdedup._assigned_frame)
     sample_target = (
         None if train_sample_rows is None else max(train_sample_rows, k)
     )
-    slim = train_sample(
-        emb, "vec_id", sample_target, n=train_sample_n
-    ).select(
-        "vec_id", vec_col, _nrm(emb, vec_col).alias("_nrm")
-    ).select(
-        "vec_id",
-        F.array(
-            *[
-                F.transform(
-                    F.slice(vec_col, s * PQ_SUB + 1, PQ_SUB),
-                    lambda x: x.cast("double") / F.col("_nrm"),
-                )
-                for s in range(m)
-            ]
-        ).alias("subs"),
-    )
+    slim = _subs(train_sample(emb, "vec_id", sample_target, n=train_sample_n))
     if driver_train is None:
         driver_train = _driver_train_auto(sample_target, train_sample_n, k)
     if driver_train:
-        return _np_fused_loop(_collect_subs_arrow(slim, m), m, k,
-                              max_iters, rel_tol)
+        ids, V = _collect_ids_matrix(slim, "vec_id", "subs")
+        S = V.reshape(len(ids), PQ_M, -1)
+        seed_pos = _np_seed_indices(ids, k)
+        return [
+            _np_fit_loop(S[:, s, :], seed_pos, max_iters, REL_TOL)[0]
+            for s in range(PQ_M)
+        ]
     slim = slim.persist()
     try:
-        return _fused_loop(slim, m, k, max_iters, rel_tol)
+        return _fused_loop(slim, k, max_iters)
     finally:
         slim.unpersist(blocking=False)
 
 
-def _fused_stats(slim: DataFrame, books, sub_dim: int):
+def _fused_stats(slim: DataFrame, books):
     """One fused Lloyd iteration's assignment/update job — shared by
     the production loop and the oracle-form loop (round-15) so the
     assignment semantics (broadcast books row, array_min over (d, j)
@@ -486,44 +502,30 @@ def _fused_stats(slim: DataFrame, books, sub_dim: int):
         .agg(
             F.sum("x").alias("sum_x"),
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("_sq_dist") / sub_dim).alias("d"),
+            F.sum(F.col("_sq_dist") / PQ_SUB).alias("d"),
         )
         .collect()
     )
 
 
 def _fused_loop(
-    slim: DataFrame, m: int, k: int, max_iters: int, rel_tol: float
+    slim: DataFrame, k: int, max_iters: int
 ) -> list[list[list[float]]]:
+    from .kmeans import REL_TOL, _converged, kmeans_init
+
     # init: the hash-bucket min-id pick is id-derived, so every subspace
-    # seeds from the SAME rows — one collect slices all m books
-    # (identical ids, and identical subvector values, to what m separate
-    # kmeans_init calls would pick)
-    seed_ids = (
-        slim.select(F.pmod(F.hash("vec_id"), F.lit(k)).alias("b"), "vec_id")
-        .groupBy("b")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    picked = (
-        slim.join(F.broadcast(seed_ids.select("vec_id")), "vec_id")
-        .orderBy("vec_id")
-        .collect()
-    )
-    if len(picked) < k:
-        picked = slim.orderBy("vec_id").limit(k).collect()
-    books = [
-        [[float(x) for x in r["subs"][s]] for r in picked[:k]]
-        for s in range(m)
-    ]
-    sub_dim = len(books[0][0])
-    hists: list[list[float]] = [[] for _ in range(m)]
-    frozen = [False] * m
+    # seeds from the SAME rows — one pick over the nested subs column
+    # slices all m books
+    seeds = kmeans_init(slim, k, vec_col="subs")
+    books = [[seed[s] for seed in seeds] for s in range(PQ_M)]
+    hists: list[list[float]] = [[] for _ in range(PQ_M)]
+    frozen = [False] * PQ_M
     for _ in range(max_iters):
         if all(frozen):
             break
-        stats = _fused_stats(slim, books, sub_dim)
+        stats = _fused_stats(slim, books)
         new_books = [[list(c) for c in book] for book in books]
-        inertia = [0.0] * m
+        inertia = [0.0] * PQ_M
         for r in stats:
             if frozen[r["s"]]:
                 continue
@@ -531,7 +533,7 @@ def _fused_loop(
                 r["sum_x"] / r["n"]
             )
             inertia[r["s"]] += r["d"]
-        for s in range(m):
+        for s in range(PQ_M):
             if frozen[s]:
                 continue
             hists[s].append(inertia[s])
@@ -539,81 +541,7 @@ def _fused_loop(
                 frozen[s] = True
                 continue
             books[s] = new_books[s]
-            h = hists[s]
-            if len(h) >= 2 and h[-2] - h[-1] <= rel_tol * max(
-                h[-2], 1e-12
-            ):
-                frozen[s] = True
-    return books
-
-
-def _collect_subs_arrow(slim: DataFrame, m: int):
-    """Collect the (vec_id, subs) training frame as (ids, [per-subspace
-    (n, sub_dim) float64 matrices]) via ONE Arrow transfer — the same
-    driver-boundary hygiene as ``kmeans._collect_ids_matrix`` (r16): the
-    nested list<list<double>> column lands as one flat buffer and is
-    reshaped to (n, m, sub), never materialized as boxed Rows. Row
-    order matches ``collect()`` (partition order) and the doubles were
-    computed by the engine, so the numpy twin sees bit-identical
-    inputs."""
-    import numpy as np
-
-    tbl = slim.toArrow()
-    ids = tbl.column("vec_id").to_pylist()
-    if not ids:
-        raise ValueError("pq_train_fused: empty training frame")
-    outer = tbl.column("subs").combine_chunks()
-    flat = outer.flatten().flatten().to_numpy(zero_copy_only=False)
-    arr = np.asarray(flat, dtype=np.float64).reshape(len(ids), m, -1)
-    return ids, [arr[:, s, :] for s in range(m)]
-
-
-def _np_fused_loop(
-    sample, m: int, k: int, max_iters: int, rel_tol: float
-) -> list[list[list[float]]]:
-    """Driver-side twin of :func:`_fused_loop` over the collected
-    (vec_id, subs) sample — ``sample`` is the (ids, per-subspace
-    matrices) pair from :func:`_collect_subs_arrow`: IDENTICAL
-    hash-bucket min-id init (the murmur3 twin picks the same seed rows,
-    and the sub-slices were computed by the engine before the collect,
-    so init books are bit-identical), then m independent numpy Lloyd
-    loops with the same per-subspace freeze logic (inertia appended
-    before the exact-fixpoint freeze, then the relative-inertia stop).
-    Subspaces never interact in the fused job, so per-subspace loops
-    are semantically identical to the fused iteration; the only
-    divergence from the distributed loop is float-summation order
-    (pinned at 1e-9 in tests/test_driver_lloyd.py)."""
-    import numpy as np
-
-    from .kmeans import _np_seed_indices
-
-    ids, S = sample
-    seed_pos = _np_seed_indices(ids, k)
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        X = S[s]
-        C = X[seed_pos].copy()
-        hist: list[float] = []
-        for _ in range(max_iters):
-            d = np.empty((X.shape[0], C.shape[0]))
-            for j in range(C.shape[0]):
-                diff = X - C[j]
-                d[:, j] = (diff * diff).sum(1)
-            g = d.argmin(1)
-            newC = C.copy()
-            for j in range(C.shape[0]):
-                mask = g == j
-                if mask.any():
-                    newC[j] = X[mask].mean(0)
-            hist.append(float(d[np.arange(X.shape[0]), g].sum()))
-            if np.array_equal(newC, C):
-                break
-            C = newC
-            if len(hist) >= 2 and hist[-2] - hist[-1] <= rel_tol * max(
-                hist[-2], 1e-12
-            ):
-                break
-        books.append([[float(x) for x in c] for c in C])
+            frozen[s] = _converged(hists[s], REL_TOL)
     return books
 
 
@@ -630,6 +558,42 @@ def pq_codebook_from_trained(
         for j, v in enumerate(book)
     ]
     return driver_rows_df(spark, rows, "s INT, j INT, v ARRAY<DOUBLE>")
+
+
+def _table_rows(spark: SparkSession, sf_dir: str) -> int:
+    """Row count of the embeddings table on the UNSPREAD bare scan — the
+    cheapest count the source supports (no repartition, no
+    projections). One per trained build; it sizes every thinning
+    stride in it (``train_sample_n``)."""
+    from ..sources.readers import load_table
+
+    return (
+        load_table(spark, sf_dir, "embeddings", spread=False)
+        .select("vec_id")
+        .count()
+    )
+
+
+def _coarse_fit(
+    emb: DataFrame, k: int, max_iters: int, n: int
+) -> DataFrame:
+    """(centroid_id, centroid_vec, c_n2): Lloyd coarse centroids trained
+    on at most ~TRAIN_POINTS_PER_CENTROID·k rows of ``emb`` (``n`` is
+    its known row count) — the IVF coarse quantizer of every trained
+    build. ``kmeans_fit`` is looked up at call time (the traced
+    benchmark run wraps the module attribute)."""
+    from .kmeans import TRAIN_POINTS_PER_CENTROID, centroids_df, kmeans_fit
+
+    fitted, _ = kmeans_fit(
+        emb,
+        k=k,
+        max_iters=max_iters,
+        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k,
+        train_sample_n=n,
+    )
+    return centroids_df(emb.sparkSession, fitted).withColumn(
+        "c_n2", _norm2("centroid_vec")
+    )
 
 
 def topk_cosine_pq_trained(
@@ -650,20 +614,12 @@ def topk_cosine_pq_trained(
     from .kmeans import TRAIN_POINTS_PER_CENTROID
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # stride-sizing count on the UNSPREAD bare scan — the cheapest
-    # count the source supports (no repartition, no projections)
-    n_total = (
-        load_table(spark, sf_dir, "embeddings", spread=False)
-        .select("vec_id")
-        .count()
-    )
     books = pq_train_fused(
         emb,
-        m=PQ_M,
         k=k_codes,
         max_iters=max_iters,
         train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_codes,
-        train_sample_n=n_total,
+        train_sample_n=_table_rows(spark, sf_dir),
     )
     return topk_cosine_pq_df(
         emb, pq_codebook_from_trained(spark, books)
@@ -714,48 +670,27 @@ def _round_away(x: float, dp: int) -> float:
     return math.copysign(math.floor(abs(x) * s + 0.5), x) / s
 
 
-def pq_train_books_oracle(
-    emb: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ORACLE_ITERS,
-    round_dp: int = PQ_ORACLE_ROUND_DP,
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
+def pq_train_books_oracle(emb: DataFrame) -> list[list[list[float]]]:
     """Oracle-form fused Lloyd's (see the block comment above): min-id
-    init, fixed ``iters``, centroids rounded to ``round_dp`` per
-    iteration. Each iteration runs the production :func:`_fused_stats`
-    job; only init/stop/rounding differ, and each difference exists to
-    make the trainer a DuckDB one-shot."""
-    slim = (
-        emb.select("vec_id", vec_col, _nrm(emb, vec_col).alias("_nrm"))
-        .select(
-            "vec_id",
-            F.array(
-                *[
-                    F.transform(
-                        F.slice(vec_col, s * PQ_SUB + 1, PQ_SUB),
-                        lambda x: x.cast("double") / F.col("_nrm"),
-                    )
-                    for s in range(m)
-                ]
-            ).alias("subs"),
-        )
-        .persist()
-    )
+    init, fixed ``PQ_ORACLE_ITERS``, centroids rounded to
+    ``PQ_ORACLE_ROUND_DP`` per iteration — the constants the SQL twin
+    mirrors. Each iteration runs the production :func:`_fused_stats`
+    job on the same :func:`_subs` frame; only init/stop/rounding
+    differ, and each difference exists to make the trainer a DuckDB
+    one-shot."""
+    slim = _subs(emb).persist()
     try:
-        picked = slim.orderBy("vec_id").limit(k).collect()
+        picked = slim.orderBy("vec_id").limit(PQ_K).collect()
         books = [
             [[float(x) for x in r["subs"][s]] for r in picked]
-            for s in range(m)
+            for s in range(PQ_M)
         ]
-        sub_dim = len(books[0][0])
-        for _ in range(iters):
-            stats = _fused_stats(slim, books, sub_dim)
+        for _ in range(PQ_ORACLE_ITERS):
+            stats = _fused_stats(slim, books)
             new_books = [[list(c) for c in book] for book in books]
             for r in stats:
                 new_books[r["s"]][r["cluster"]][r["pos"]] = _round_away(
-                    r["sum_x"] / r["n"], round_dp
+                    r["sum_x"] / r["n"], PQ_ORACLE_ROUND_DP
                 )
             if new_books == books:  # exact fixpoint: further iters no-op
                 break
@@ -1006,30 +941,15 @@ def topk_cosine_ivfpq_trained(
     training touches O(k) rows while encode/assign still see every
     row; below the caps, bit-identical to unbounded training)."""
     from ..sources.readers import load_table
-    from .kmeans import TRAIN_POINTS_PER_CENTROID, centroids_df, kmeans_fit
+    from .kmeans import TRAIN_POINTS_PER_CENTROID
     from .similarity import _emb_normed
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # one stride-sizing count, on the UNSPREAD bare scan, shared by
-    # both trainers
-    n_total = (
-        load_table(spark, sf_dir, "embeddings", spread=False)
-        .select("vec_id")
-        .count()
-    )
-    fitted, _ = kmeans_fit(
-        emb,
-        k=k_coarse,
-        max_iters=max_iters,
-        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_coarse,
-        train_sample_n=n_total,
-    )
-    coarse = centroids_df(spark, fitted).withColumn(
-        "c_n2", _norm2("centroid_vec")
-    )
+    # one stride-sizing count, shared by both trainers
+    n_total = _table_rows(spark, sf_dir)
+    coarse = _coarse_fit(emb, k_coarse, max_iters, n_total)
     books = pq_train_fused(
         emb,
-        m=PQ_M,
         k=k_codes,
         max_iters=max_iters,
         train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_codes,
@@ -1333,7 +1253,7 @@ def topk_cosine_ivfpq_residual_df(
     Same shuffle shape as the non-residual form: one equi-join on
     centroid_id, codes never wider than 8 B + the list id."""
     from ._cachescope import begin_scope, scoped_persist
-    from .kmeans import TRAIN_POINTS_PER_CENTROID, centroids_df, kmeans_fit
+    from .kmeans import TRAIN_POINTS_PER_CENTROID
     from .similarity import _assign_buckets
 
     spark = emb_raw.sparkSession
@@ -1344,16 +1264,7 @@ def topk_cosine_ivfpq_residual_df(
     if n_total is None:
         n_total = emb_raw.select("vec_id").count()
     n_cand = n_total - N_QUERIES  # query ids < N_QUERIES by contract
-    fitted, _ = kmeans_fit(
-        emb_raw,
-        k=k_coarse,
-        max_iters=max_iters,
-        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_coarse,
-        train_sample_n=n_total,
-    )
-    coarse = centroids_df(spark, fitted).withColumn(
-        "c_n2", _norm2("centroid_vec")
-    )
+    coarse = _coarse_fit(emb_raw, k_coarse, max_iters, n_total)
     emb = (
         emb_raw
         if "norm2" in emb_raw.columns
@@ -1370,19 +1281,11 @@ def topk_cosine_ivfpq_residual_df(
         # k_coarse — see the constant's derivation). At the default
         # k_coarse the build's own coarse fit IS the reference; a
         # non-default build pays one extra sample-bounded fit.
-        if k_coarse == GATE_REF_K:
-            gate_coarse = coarse
-        else:
-            ref_fitted, _ = kmeans_fit(
-                emb_raw,
-                k=GATE_REF_K,
-                max_iters=max_iters,
-                train_sample_rows=TRAIN_POINTS_PER_CENTROID * GATE_REF_K,
-                train_sample_n=n_total,
-            )
-            gate_coarse = centroids_df(spark, ref_fitted).withColumn(
-                "c_n2", _norm2("centroid_vec")
-            )
+        gate_coarse = (
+            coarse
+            if k_coarse == GATE_REF_K
+            else _coarse_fit(emb_raw, GATE_REF_K, max_iters, n_total)
+        )
         e_res, e_ctr = _gate_energies(
             emb.filter(F.col("vec_id") >= N_QUERIES),
             gate_coarse,
@@ -1396,7 +1299,6 @@ def topk_cosine_ivfpq_residual_df(
     if not use_residual:
         books = pq_train_fused(
             emb_raw,
-            m=PQ_M,
             k=k_codes,
             max_iters=max_iters,
             train_sample_rows=cb_cap,
@@ -1419,7 +1321,6 @@ def topk_cosine_ivfpq_residual_df(
     )
     books = pq_train_fused(
         cand_res,
-        m=PQ_M,
         k=k_codes,
         max_iters=max_iters,
         train_sample_rows=cb_cap,
@@ -1471,11 +1372,7 @@ def topk_cosine_ivfpq_residual(
         k_codes=k_codes,
         nprobe=nprobe,
         max_iters=max_iters,
-        n_total=(
-            load_table(spark, sf_dir, "embeddings", spread=False)
-            .select("vec_id")
-            .count()
-        ),
+        n_total=_table_rows(spark, sf_dir),
     )
 
 
@@ -1967,93 +1864,67 @@ def opq_rotation(
     emb: DataFrame,
     cap: int,
     n: int,
-    m: int = PQ_M,
     k: int = PQ_K,
     opq_iters: int = OPQ_ITERS,
-    dim: int = DIM,
 ) -> list[list[float]]:
     """Train the OPQ orthogonal rotation R (Ge et al., CVPR 2013 — the
     construction behind FAISS's OPQMatrix) on the bounded training
     sample, driver-side: alternate (a) per-subspace Lloyd's codebooks
     on the rotated sample with (b) the orthogonal-Procrustes update
     R = U·Vᵀ from SVD(Xᵀ·Y), Y the sample's codebook reconstruction.
-    The rotation redistributes variance so the m INDEPENDENT subspace
-    codebooks absorb less error at the same bit budget.
+    The rotation redistributes variance so the PQ_M INDEPENDENT
+    subspace codebooks absorb less error at the same bit budget.
 
     Driver cost is bounded: the hash-thinned sample is ≤2·cap rows ×
-    DIM doubles (the same bounded-sync-point class as the centroid /
-    codebook collects), and the numpy loop touches only that sample.
-    DETERMINISTIC: sample collected and processed in vec_id order,
-    stride-init Lloyd, LAPACK SVD on identical input. Empty sample ->
-    identity (OPQ degrades to plain PQ, the safe no-op)."""
+    DIM doubles, collected as one Arrow transfer
+    (``kmeans._collect_ids_matrix``; the same bounded-sync-point class
+    as the centroid / codebook collects), and the numpy loop touches
+    only that sample. DETERMINISTIC: sample sorted by vec_id,
+    stride-init Lloyd over ``kmeans._np_sq_dists``, LAPACK SVD on
+    identical input. Empty sample -> identity (OPQ degrades to plain
+    PQ, the safe no-op)."""
     import numpy as np
 
-    from .kmeans import train_sample
+    from .kmeans import _collect_ids_matrix, _np_sq_dists, train_sample
 
-    rows = (
-        train_sample(emb, "vec_id", cap, n=n)
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: x.cast("double") / F.col("_nrm"),
-            ).alias("u"),
-        )
-        .collect()
+    samp = train_sample(emb, "vec_id", cap, n=n).select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: x.cast("double") / F.col("_nrm"),
+        ).alias("u"),
     )
-    if not rows:
-        # ``dim`` sizes the identity no-op; callers with a non-DIM
-        # corpus must pass their dimension or the rotation would be
-        # shape-mismatched in _rotated_frame (round-13 advisory)
-        return [
-            [1.0 if i == j else 0.0 for j in range(dim)]
-            for i in range(dim)
-        ]
-    rows.sort(key=lambda r: r["vec_id"])
-    x = np.array([r["u"] for r in rows], dtype=np.float64)
-    d = x.shape[1]
-    sub = d // m
-
-    def _dists(xs: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-        # per-centroid slices, NOT the (n, k, sub) broadcast: identical
-        # per-(row, j) reduction tree (bit-equal distances — pinned by
-        # the r15 A/B), ~10x faster for skipping the rank-3 temporary
-        d_ = np.empty((xs.shape[0], c.shape[0]))
-        for j in range(c.shape[0]):
-            d_[:, j] = ((xs - c[j]) ** 2).sum(1)
-        return d_
+    try:
+        ids, x = _collect_ids_matrix(samp, "vec_id", "u")
+    except ValueError:  # empty sample
+        return np.eye(DIM).tolist()
+    x = x[np.argsort(ids, kind="stable")]
 
     def _lloyd(xs: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
         # stride init (the hash-bucket pick's numpy analog), 6 rounds —
         # this trains only the ROTATION; the shipped codebooks come
-        # from the standard distributed trainer on the rotated frame.
-        # Returns (centroids, final assignment): the caller previously
-        # recomputed the last assignment with an identical distance
-        # pass — one of seven paid twice (r15).
+        # from the standard trainer on the rotated frame. Returns
+        # (centroids, final assignment).
         idx = (np.arange(k) * max(len(xs) // k, 1)) % len(xs)
         c = xs[idx].copy()
         for _ in range(6):
-            a = _dists(xs, c).argmin(1)
+            a = _np_sq_dists(xs, c).argmin(1)
             for j in range(k):
                 msk = a == j
                 if msk.any():
                     c[j] = xs[msk].mean(0)
-        return c, _dists(xs, c).argmin(1)
+        return c, _np_sq_dists(xs, c).argmin(1)
 
-    r = np.eye(d)
+    r = np.eye(x.shape[1])
     for _ in range(opq_iters):
         xr = x @ r
-        # start from xr, not empty: when d % m != 0 the tail columns
-        # beyond m·sub are never quantized below — copying keeps them
-        # "perfectly reconstructed" (deterministic, biases R to leave
-        # them alone) instead of feeding uninitialized memory to the
-        # SVD (round-13 advisory; unreachable at the shipped DIM=64,
-        # m=8, but the determinism contract must not depend on that)
+        # a copy, not empty: any column past PQ_M·PQ_SUB (none at DIM)
+        # stays deterministic
         y = xr.copy()
-        for s in range(m):
-            xs = xr[:, s * sub:(s + 1) * sub]
-            c, a = _lloyd(xs)
-            y[:, s * sub:(s + 1) * sub] = c[a]
+        for s in range(PQ_M):
+            cols = slice(s * PQ_SUB, (s + 1) * PQ_SUB)
+            c, a = _lloyd(xr[:, cols])
+            y[:, cols] = c[a]
         u, _sv, vt = np.linalg.svd(x.T @ y)
         r = u @ vt
     return [[float(v) for v in row] for row in r]
@@ -2100,7 +1971,6 @@ def _rotated_frame(emb: DataFrame, rot: list[list[float]]) -> DataFrame:
 def topk_cosine_opq_trained(
     spark: SparkSession,
     sf_dir: str,
-    m: int = PQ_M,
     k_codes: int = PQ_K,
     opq_iters: int = OPQ_ITERS,
     max_iters: int = 3,
@@ -2131,22 +2001,15 @@ def topk_cosine_opq_trained(
     from .kmeans import TRAIN_POINTS_PER_CENTROID
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_total = (
-        load_table(spark, sf_dir, "embeddings", spread=False)
-        .select("vec_id")
-        .count()
-    )
+    n_total = _table_rows(spark, sf_dir)
     cap = TRAIN_POINTS_PER_CENTROID * k_codes
     base = emb.select(
         "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
     )
-    rot = opq_rotation(
-        base, cap, n_total, m=m, k=k_codes, opq_iters=opq_iters
-    )
+    rot = opq_rotation(base, cap, n_total, k=k_codes, opq_iters=opq_iters)
     rotated = _rotated_frame(emb, rot)
     books = pq_train_fused(
         rotated,
-        m=m,
         k=k_codes,
         max_iters=max_iters,
         train_sample_rows=cap,
@@ -2160,7 +2023,6 @@ def topk_cosine_opq_trained(
 def topk_cosine_opq_ivfpq_trained(
     spark: SparkSession,
     sf_dir: str,
-    m: int = PQ_M,
     k_coarse: int = 8,
     k_codes: int = PQ_K,
     nprobe: int = 2,
@@ -2180,39 +2042,19 @@ def topk_cosine_opq_ivfpq_trained(
     (tests/test_pq_opq.py: no-harm vs plain IVF+PQ-trained at equal
     budget on both fixtures)."""
     from ..sources.readers import load_table
-    from .kmeans import (
-        TRAIN_POINTS_PER_CENTROID,
-        centroids_df,
-        kmeans_fit,
-    )
+    from .kmeans import TRAIN_POINTS_PER_CENTROID
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_total = (
-        load_table(spark, sf_dir, "embeddings", spread=False)
-        .select("vec_id")
-        .count()
-    )
+    n_total = _table_rows(spark, sf_dir)
     cap = TRAIN_POINTS_PER_CENTROID * k_codes
     base = emb.select(
         "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
     )
-    rot = opq_rotation(
-        base, cap, n_total, m=m, k=k_codes, opq_iters=opq_iters
-    )
+    rot = opq_rotation(base, cap, n_total, k=k_codes, opq_iters=opq_iters)
     rotated = _rotated_frame(emb, rot)
-    fitted, _ = kmeans_fit(
-        rotated,
-        k=k_coarse,
-        max_iters=max_iters,
-        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_coarse,
-        train_sample_n=n_total,
-    )
-    coarse = centroids_df(spark, fitted).withColumn(
-        "c_n2", _norm2("centroid_vec")
-    )
+    coarse = _coarse_fit(rotated, k_coarse, max_iters, n_total)
     books = pq_train_fused(
         rotated,
-        m=m,
         k=k_codes,
         max_iters=max_iters,
         train_sample_rows=cap,

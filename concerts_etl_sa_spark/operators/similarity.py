@@ -337,8 +337,11 @@ def _assign_buckets(emb: DataFrame, centroids: DataFrame, n_keep: int) -> DataFr
     (embedding, norm2) row on vec_id; assignment now never leaves the
     scan stage, so at corpus scale the index build is shuffle-free until
     the probe join. n_keep=1 and n_keep>1 share the identical ranking
-    expression (no dual-path NaN hazard: ``nanvl`` pins an undefined
-    0/0 cosine to -inf, ranking it last in both arms)."""
+    expression (no dual-path NaN hazard: ``nanvl`` pins a NaN cosine —
+    from a NaN dot — to -inf, ranking it last in both arms). A 0/0
+    cosine never reaches it: a zero-norm vector's divide raises
+    DIVIDE_BY_ZERO under ANSI mode, Spark 4's default, which the
+    session keeps (pinned in tests/test_labelqa.py)."""
     cents = centroids.agg(
         F.collect_list(
             F.struct("centroid_id", "centroid_vec", "c_n2")

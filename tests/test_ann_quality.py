@@ -109,7 +109,7 @@ def test_realistic_fixture_compression_family_recall_floors(spark):
     )
     r_sq8 = recall_vs_truth(pq.topk_cosine_sq8_df(emb), truth)
     books = pq.pq_train_fused(
-        emb, m=pq.PQ_M, k=pq.PQ_K, max_iters=3,
+        emb, k=pq.PQ_K, max_iters=3,
         train_sample_rows=TRAIN_POINTS_PER_CENTROID * pq.PQ_K,
         train_sample_n=n,
     )
@@ -174,7 +174,7 @@ def test_sf01_realistic_compression_family_floors_and_labelqa(spark):
     )
     r_sq8 = recall_vs_truth(pq.topk_cosine_sq8_df(emb), truth)
     books = pq.pq_train_fused(
-        emb, m=pq.PQ_M, k=pq.PQ_K, max_iters=3,
+        emb, k=pq.PQ_K, max_iters=3,
         train_sample_rows=TRAIN_POINTS_PER_CENTROID * pq.PQ_K,
         train_sample_n=n,
     )

@@ -339,3 +339,23 @@ sys.stdout.flush()
     assert "stray python print after the claim" in r.stderr
     assert "subprocess banner after the claim" in r.stderr
     assert "stray python print after the emit" in r.stderr
+
+
+def test_norm_floor_uses_own_canary_off_32_cores():
+    """The registered canary_ref is a 32-core mark. A sitting at another
+    core count normalizes its rows by its OWN canary, so the ±ABS_FLOOR
+    seconds must convert through that canary too: through the 32-core
+    ref, an 8-core sitting (canary ~1.0 s vs 0.49 s) got twice its
+    noise allowance and passed a regression of that size."""
+    q = "consolidate_flagship"
+    mark, _src = norm_prior({q}, 8)[q]
+    cmed = 1.025  # BENCH_r16_c8.json's canary median
+    limit = mark * (1.0 + REL_BAND) + ABS_FLOOR / cmed
+    over = {"queries_norm": {q: limit + 0.1}, "canary_median": cmed,
+            "cpus": 8}
+    regs, lines = audit(over)
+    assert any(q in r for r in regs), lines
+    inside = {"queries_norm": {q: limit - 0.01}, "canary_median": cmed,
+              "cpus": 8}
+    regs, lines = audit(inside)
+    assert not regs, lines

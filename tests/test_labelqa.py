@@ -13,8 +13,12 @@ not quality)."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.group_ops import PandasCogroupedOps
 
+from concerts_etl_sa_spark.operators import labelqa as LQ
 from concerts_etl_sa_spark.operators.labelqa import (
     KNN_K,
     knn_label_noise,
@@ -261,13 +265,15 @@ def test_null_labels_excluded_from_audit_and_votes(spark):
     assert all(r["knn_majority_label"] is not None for r in out)
 
 
-def test_arrow_scorer_bit_identical_to_expression_form(spark):
+def test_arrow_scorer_bit_identical_to_expression_form(spark, monkeypatch):
     """Round-16 (verdict #1): the cogrouped Arrow pair scorer must
     produce the IDENTICAL frame as the all-JVM equi-join + 64-term
     expression form — the raw cosine accumulates in the same
     left-associative IEEE order and the 6-dp rounding stays in the
-    JVM, so this is bit-equality, not closeness. Checked on both the
-    shipped table and the clustered fixture (double-typed vectors)."""
+    JVM, so this is bit-equality, not closeness. Checked on the
+    shipped table, the clustered fixture (double-typed vectors), and a
+    hot IVF list holding every vector, scored in several query-row
+    tiles whose dense pair blocks stay within tile × list size."""
     from concerts_etl_sa_spark.operators.labelqa import _labeled
     from concerts_etl_sa_spark.operators.semdedup import (
         SEMDEDUP_CENTROID_RESIDUE,
@@ -299,6 +305,72 @@ def test_arrow_scorer_bit_identical_to_expression_form(spark):
     a = knn_label_noise_ivf_df(df, cl_cents, arrow_score=True).collect()
     b = knn_label_noise_ivf_df(df, cl_cents, arrow_score=False).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+    # hot list: one centroid (vec_id 0), so all 300 vectors share ONE
+    # list on both sides; a 64-row tile makes the scorer run 5 tiles
+    block = 64
+    monkeypatch.setattr(LQ, "SCORE_BLOCK_ROWS", block)
+    scorers = []
+    apply_in_arrow = PandasCogroupedOps.applyInArrow
+
+    def spy(self, func, schema):
+        scorers.append(func)
+        return apply_in_arrow(self, func, schema)
+
+    monkeypatch.setattr(PandasCogroupedOps, "applyInArrow", spy)
+    hot = _mod_centroids(df, 1 << 40)
+    a = knn_label_noise_ivf_df(df, hot, arrow_score=True).collect()
+    b = knn_label_noise_ivf_df(df, hot, arrow_score=False).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+    # the same scorer in-process on the hot list: every dense pair
+    # block it allocates is at most block x list size
+    tbl = df.toArrow()
+    n = tbl.num_rows
+    side = {
+        p: pa.table(
+            {
+                f"{p}_id": tbl["vec_id"],
+                f"{p}_vec": tbl["embedding"],
+                f"{p}_n2": tbl["norm2"],
+                f"{p}_label": tbl["label"],
+            }
+        )
+        for p in ("a", "b")
+    }
+    shapes = []
+    zeros = np.zeros
+
+    def spy_zeros(shape, *args, **kwargs):
+        shapes.append(shape)
+        return zeros(shape, *args, **kwargs)
+
+    monkeypatch.setattr(np, "zeros", spy_zeros)
+    out = scorers[0](side["a"], side["b"])
+    monkeypatch.setattr(np, "zeros", zeros)
+    assert out.num_rows == n * (n - 1)
+    blocks = [s for s in shapes if len(s) == 2]
+    assert len(blocks) == -(-n // block), shapes
+    assert max(r * c for r, c in blocks) <= block * n, shapes
+
+
+def test_zero_norm_vector_raises_in_both_scorers(spark):
+    """A zero-norm labeled vector makes the cosine routing compute
+    0.0 / sqrt(0.0). Under ANSI mode (Spark 4's default, which the
+    session keeps) that raises DIVIDE_BY_ZERO before either pair
+    scorer runs, so neither the JVM form's divide nor the Arrow form's
+    NaN is ever ranked: the two forms cannot diverge on it."""
+    df, _, _ = _clustered_labeled(spark, n=60)
+    zero = spark.createDataFrame(
+        [(10_000, [0.0] * 64, 0)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT",
+    ).withColumn("norm2", _norm2("embedding"))
+    cents = _mod_centroids(df, 10)
+    for arrow in (True, False):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            knn_label_noise_ivf_df(
+                df.unionByName(zero), cents, arrow_score=arrow
+            ).collect()
 
 
 def test_arrow_scorer_node_only_in_ivf_plan(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from concerts_etl_sa_spark.operators import pq
 from concerts_etl_sa_spark.operators.pq import (
     PQ_K,
-    PQ_M,
     _nrm,
     _rotated_frame,
     opq_rotation,
@@ -70,7 +69,7 @@ def test_opq_identity_rotation_equals_plain_pq(spark):
     ]
     rotated = _rotated_frame(emb, ident)
     books = pq.pq_train_fused(
-        rotated, m=PQ_M, k=PQ_K, max_iters=3,
+        rotated, k=PQ_K, max_iters=3,
         train_sample_rows=256 * PQ_K, train_sample_n=n,
     )
     a = sorted(map(tuple, pq.topk_cosine_pq_df(
@@ -105,7 +104,7 @@ def test_opq_recall_floors_both_fixtures(spark):
     rot = opq_rotation(_base(emb), 256 * PQ_K, n)
     rotated = _rotated_frame(emb, rot)
     books = pq.pq_train_fused(
-        rotated, m=PQ_M, k=PQ_K, max_iters=3,
+        rotated, k=PQ_K, max_iters=3,
         train_sample_rows=256 * PQ_K, train_sample_n=n,
     )
     r_opq_real = recall_vs_truth(
@@ -115,7 +114,7 @@ def test_opq_recall_floors_both_fixtures(spark):
         truth_r,
     )
     books_p = pq.pq_train_fused(
-        emb, m=PQ_M, k=PQ_K, max_iters=3,
+        emb, k=PQ_K, max_iters=3,
         train_sample_rows=256 * PQ_K, train_sample_n=n,
     )
     r_pq_real = recall_vs_truth(
@@ -144,7 +143,7 @@ def test_opq_recall_floor_langblob(spark):
     rot = opq_rotation(_base(emb), 256 * PQ_K, n)
     rotated = _rotated_frame(emb, rot)
     books = pq.pq_train_fused(
-        rotated, m=PQ_M, k=PQ_K, max_iters=3,
+        rotated, k=PQ_K, max_iters=3,
         train_sample_rows=256 * PQ_K, train_sample_n=n,
     )
     r_opq = recall_vs_truth(
@@ -154,7 +153,7 @@ def test_opq_recall_floor_langblob(spark):
         truth,
     )
     books_p = pq.pq_train_fused(
-        emb, m=PQ_M, k=PQ_K, max_iters=3,
+        emb, k=PQ_K, max_iters=3,
         train_sample_rows=256 * PQ_K, train_sample_n=n,
     )
     r_pq = recall_vs_truth(
@@ -204,3 +203,11 @@ def test_opq_shape_invariants(spark):
         rs.sort(key=lambda r: r.rn)
         assert [r.rn for r in rs] == list(range(1, len(rs) + 1)), q
         assert all(a.adc >= b.adc for a, b in zip(rs, rs[1:])), q
+
+
+def test_opq_rotation_empty_sample_is_identity(spark):
+    """No training rows: the rotation degrades to the DIM x DIM
+    identity, so OPQ falls back to plain PQ instead of failing."""
+    emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 0)
+    rot = opq_rotation(_base(emb), 256 * PQ_K, 0)
+    assert rot == np.eye(64).tolist()

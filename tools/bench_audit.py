@@ -30,7 +30,9 @@ The absolute noise floor (±0.35 s run-to-run on sub-second rows)
 converts to normalized units by dividing by the REGISTERED idle canary
 mark — on a loaded host both the jitter seconds and the canary seconds
 inflate together, so the normalized floor is a host-independent
-constant.
+constant. The registered mark is a 32-core one; a sitting at another
+core count divides by its own canary median instead (its marks are
+normalized by that canary, and its canary runs ~2-7x slower).
 
 Usage:
   python bench.py > /tmp/bench_new.json
@@ -144,7 +146,10 @@ def _audit_normalized(new: dict) -> tuple[list[str], list[str]]:
     cpus = int(new.get("cpus") or 32)
     prior = norm_prior(set(newn) | set(newq), cpus)
     abs_prior = best_prior(set(newq), cpus)
-    cref = canary_ref() or float(new.get("canary_median") or 1.0)
+    # the registered canary is a 32-core mark: a sitting at another core
+    # count normalizes by its own canary, so its floor converts by it too
+    cref = canary_ref() if cpus == 32 else None
+    cref = cref or float(new.get("canary_median") or canary_ref() or 1.0)
     norm_floor = ABS_FLOOR / cref
     regressions: list[str] = []
     lines: list[str] = []

@@ -4,12 +4,17 @@ the round-10 ngram stage probe: name where the time goes, then either
 fix it or document the bound).
 
 Stages of the composition (operators/pq.py:topk_cosine_ivfpq_trained):
-  coarse_fit   kmeans_fit(k=8)           — Lloyd coarse centroids
-  pq_train     pq_train_fused            — 1 init + max_iters fused jobs
+  size_count   the unspread row count    — sizes both thinning strides
+  coarse_fit   _coarse_fit(k=8)          — Lloyd coarse centroids
+  pq_train     pq_train_fused            — codebooks (driver-side or
+                                           1 init + max_iters fused jobs)
   probe_score  topk_cosine_ivfpq_df      — encode + inverted-list prune
                                            + broadcast-ADC scoring + rank
-The end-to-end row is timed alongside so the stage sum can be checked
-against it (shared-scan effects make the sum slightly exceed the whole).
+Both trainers get the production sample bounds (256 points per
+centroid, ``train_sample_n`` from the size count), so the stages time
+the program the end-to-end row runs. The end-to-end row is timed
+alongside so the stage sum can be checked against it (shared-scan
+effects make the sum slightly exceed the whole).
 
 Usage: python tools/ivfpq_stage_probe.py [--runs 3] [--sf /root/testdata/sf0.1]
 """
@@ -36,16 +41,17 @@ def main() -> None:
     if load1 > 4.0:
         print(f"WARNING loadavg {load1:.1f} — rerun idle", file=sys.stderr)
 
-    from concerts_etl_sa_spark.operators import pq as PQ
-    from concerts_etl_sa_spark.operators.kmeans import centroids_df, kmeans_fit
+    from concerts_etl_sa_spark.operators.kmeans import TRAIN_POINTS_PER_CENTROID
     from concerts_etl_sa_spark.operators.pq import (
-        PQ_M,
+        PQ_K,
+        _coarse_fit,
+        _table_rows,
         pq_codebook_from_trained,
         pq_train_fused,
         topk_cosine_ivfpq_df,
         topk_cosine_ivfpq_trained,
     )
-    from concerts_etl_sa_spark.operators.similarity import _emb_normed, _norm2
+    from concerts_etl_sa_spark.operators.similarity import _emb_normed
     from concerts_etl_sa_spark.session import get_spark
     from concerts_etl_sa_spark.sources.readers import load_table
 
@@ -55,14 +61,18 @@ def main() -> None:
         t: dict[str, float] = {}
         emb = load_table(spark, args.sf, "embeddings")
         t0 = time.time()
-        fitted, _ = kmeans_fit(emb, k=8, max_iters=3)
+        n_total = _table_rows(spark, args.sf)
+        t["size_count"] = time.time() - t0
+        t0 = time.time()
+        coarse = _coarse_fit(emb, 8, 3, n_total)
         t["coarse_fit"] = time.time() - t0
         t0 = time.time()
-        books = pq_train_fused(emb, m=PQ_M, max_iters=3)
-        t["pq_train"] = time.time() - t0
-        coarse = centroids_df(spark, fitted).withColumn(
-            "c_n2", _norm2("centroid_vec")
+        books = pq_train_fused(
+            emb, max_iters=3,
+            train_sample_rows=TRAIN_POINTS_PER_CENTROID * PQ_K,
+            train_sample_n=n_total,
         )
+        t["pq_train"] = time.time() - t0
         t0 = time.time()
         topk_cosine_ivfpq_df(
             _emb_normed(spark, args.sf),
@@ -88,7 +98,9 @@ def main() -> None:
             samples.setdefault(k, []).append(v)
     med = {k: round(statistics.median(v), 2) for k, v in samples.items()}
     med["stage_sum"] = round(
-        med["coarse_fit"] + med["pq_train"] + med["probe_score"], 2
+        med["size_count"] + med["coarse_fit"] + med["pq_train"]
+        + med["probe_score"],
+        2,
     )
     print(json.dumps({"loadavg_start": load1, "runs": args.runs,
                       "sf": args.sf, "t": med}))

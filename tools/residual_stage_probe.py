@@ -95,7 +95,7 @@ def main() -> None:
 
         t0 = time.time()
         books = PQ.pq_train_fused(
-            emb_raw, m=PQ.PQ_M, k=PQ.PQ_K, max_iters=3,
+            emb_raw, k=PQ.PQ_K, max_iters=3,
             train_sample_rows=cb_cap, train_sample_n=n_total,
         )
         t["pq_train"] = time.time() - t0
