@@ -332,6 +332,29 @@ def _time_noop(make_df) -> float:
     return time.time() - t0
 
 
+def group_counts(spark, group: str) -> tuple[int, int]:
+    """(jobs, stages) launched under Spark job group ``group``, counted
+    from ``statusTracker()`` as perfbench's tracer counts a span: a
+    stage counts only if it ran at least one task (a skipped stage, one
+    whose shuffle output a reused exchange supplied, ran none)."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = 0
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            stage = tracker.getStageInfo(sid)
+            if stage and stage.numCompletedTasks + stage.numFailedTasks:
+                stages += 1
+    return len(jobs), stages
+
+
+def _clear_job_group(spark) -> None:
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
 def _norm_mark(tsamples: list[float], csamples: list[float]) -> float | None:
     """The normalized gate mark for one row: MIN over runs of
     run_seconds ÷ mean(bracketing canary seconds). csamples has
@@ -450,6 +473,8 @@ def main() -> None:
     canary_med: dict[str, float] = {}
     norm_marks: dict[str, float] = {}
     canary_all: list[float] = []
+    row_jobs: dict[str, int] = {}
+    row_stages: dict[str, int] = {}
     spark.catalog.clearCache()  # drop warmup-era cached indexes
     for name in HEADLINE:
         fn = qs[name]
@@ -469,8 +494,17 @@ def main() -> None:
         # protocol — clearing mid-row would break cross-run cache reuse
         # and shift the whole registered absolute+normalized history.
         csamples = [_time_noop(lambda: _canary_df(spark))]
-        for _ in range(runs):
+        for i in range(runs):
+            # the first timed sample runs under the row's own job group,
+            # so the JSON can say how many jobs and stages the row runs
+            if i == 0:
+                spark.sparkContext.setJobGroup(f"bench-{name}", name)
             samples.append(_time_noop(lambda: fn(spark, sf_dir)))
+            if i == 0:
+                _clear_job_group(spark)
+                row_jobs[name], row_stages[name] = group_counts(
+                    spark, f"bench-{name}"
+                )
             csamples.append(_time_noop(lambda: _canary_df(spark)))
         timings[name] = round(statistics.median(samples), 3)
         canary_med[name] = round(statistics.median(csamples), 3)
@@ -509,6 +543,10 @@ def main() -> None:
         "canary_median": round(statistics.median(canary_all), 3),
         "canary_per_query": canary_med,
         "queries_norm": norm_marks,
+        # per row, the Spark jobs and the stages that ran a task in its
+        # first timed sample: a row that grew points at the work it added
+        "queries_jobs": row_jobs,
+        "queries_stages": row_stages,
         "canary_n": CANARY_N,
         # the sitting's core count (r16): normalized marks are NOT
         # comparable across core counts (the canary slows ~2.8x at c8

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..logging_json import log_json
 from .util import driver_rows_df
 
 # Two-level (coarse -> fine) assignment engages only above this K: below
@@ -177,19 +178,21 @@ def _driver_train_auto(
     the caller's known row count — AND the local fit's work bound
     (rows·k, the per-iteration flop product) stays under
     DRIVER_TRAIN_MAX_ROWK. False when either might be bigger or the
-    size is unknown (never spend a job just to decide)."""
+    size is unknown (never spend a job just to decide). The decision
+    is logged as one JSON line on stderr (``bound`` None = unknown)."""
     if sample_target is not None:
         bound = 2 * sample_target
         if n is not None:
             bound = min(bound, n)
-    elif n is not None:
-        bound = n
     else:
-        return False
-    return (
-        bound <= DRIVER_TRAIN_MAX_ROWS
+        bound = n
+    decision = (
+        bound is not None
+        and bound <= DRIVER_TRAIN_MAX_ROWS
         and bound * max(k, 1) <= DRIVER_TRAIN_MAX_ROWK
     )
+    log_json("info", "lloyd dispatch", bound=bound, k=k, driver_train=decision)
+    return decision
 
 
 def _collect_ids_matrix(slim: DataFrame, id_col: str, vec_col: str):

@@ -44,11 +44,10 @@ def pack_sequences(
     max_tokens: int,
     *,
     n_buckets: int = N_PACK_BUCKETS,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
-    """Adds ``shard_id`` to ``docs``. Only (id, token-count) rows enter
-    the pandas stage; all other columns re-attach by id join."""
+    """Adds ``shard_id`` to ``docs``, which carries ``doc_id`` and
+    ``n_tokens``. Only those two columns enter the pandas stage; all
+    other columns re-attach by the ``doc_id`` join."""
     import pandas as pd
 
     def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -71,23 +70,23 @@ def pack_sequences(
         )
 
     slim = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
-        F.pmod(F.hash(id_col), F.lit(n_buckets)).alias("_bucket"),
+        "doc_id",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.pmod(F.hash("doc_id"), F.lit(n_buckets)).alias("_bucket"),
     )
     packed = slim.groupBy("_bucket").applyInPandas(_pack, _PACK_SCHEMA)
     return docs.join(
         packed.select("doc_id", "shard_id"),
-        docs[id_col] == packed["doc_id"],
+        docs["doc_id"] == packed["doc_id"],
     ).drop(packed["doc_id"])
 
 
-def shard_stats(packed: DataFrame, tokens_col: str = "n_tokens") -> DataFrame:
+def shard_stats(packed: DataFrame) -> DataFrame:
     """Per-shard doc and token totals (for trainer manifest / QA)."""
     return (
         packed.groupBy("shard_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(tokens_col).alias("total_tokens"),
+            F.sum("n_tokens").alias("total_tokens"),
         )
     )

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..logging_json import log_json
 from .similarity import DIM, N_QUERIES, TOP_K, _norm2, _norm2_sql
 from .util import sorted_small
 
@@ -1166,9 +1167,16 @@ def _gate_energies(
     before assignment selects the same vec_ids as assigning then
     sampling), same element expressions, same driver-side vec_id-order
     accumulation — pinned by test_fused_gate_equals_separate_probes.
+    The sample crosses the driver boundary as one Arrow transfer of
+    ``[e, u_1..u_dim]`` per row (:func:`kmeans._collect_ids_matrix`);
+    ``E_res`` keeps the sequential Python sum, and the mean vector is
+    numpy's axis-0 sum, which adds rows one at a time per column —
+    the same order as the per-element loop of the reference form.
     Empty sample -> (inf, 0.0): the ratio gate deterministically
     selects the plain build (both safe directions)."""
-    from .kmeans import train_sample
+    import numpy as np
+
+    from .kmeans import _collect_ids_matrix, train_sample
     from .similarity import _assign_buckets
 
     cbar = _unit_coarse(coarse)
@@ -1183,33 +1191,27 @@ def _gate_energies(
             lambda x, y: x.cast("double") / F.sqrt(F.col("norm2")) - y,
         )
 
-    rows = (
-        samp.join(F.broadcast(cbar), "centroid_id")
-        .select(
-            "vec_id",
-            F.aggregate(
-                F.zip_with(_res_vec(), _res_vec(), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, p: acc + p,
-            ).alias("e"),
-            F.transform(
-                "embedding",
-                lambda x: x.cast("double") / F.sqrt(F.col("norm2")),
-            ).alias("u"),
-        )
-        .collect()
+    e = F.aggregate(
+        F.zip_with(_res_vec(), _res_vec(), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, p: acc + p,
     )
-    if not rows:
+    u = F.transform(
+        "embedding", lambda x: x.cast("double") / F.sqrt(F.col("norm2"))
+    )
+    try:
+        ids, eu = _collect_ids_matrix(
+            samp.join(F.broadcast(cbar), "centroid_id").select(
+                "vec_id", F.concat(F.array(e), u).alias("eu")
+            ),
+            "vec_id",
+            "eu",
+        )
+    except ValueError:  # empty sample
         return float("inf"), 0.0
-    rows.sort(key=lambda r: r["vec_id"])
-    e_res = sum(r["e"] for r in rows) / len(rows)
-    dim = len(rows[0]["u"])
-    acc = [0.0] * dim
-    for r in rows:
-        u = r["u"]
-        for i in range(dim):
-            acc[i] += u[i]
-    m = [a / len(rows) for a in acc]
+    eu = eu[np.argsort(ids, kind="stable")]
+    e_res = sum(eu[:, 0].tolist()) / len(ids)
+    m = (eu[:, 1:].sum(0) / len(ids)).tolist()
     return e_res, 1.0 - sum(x * x for x in m)
 
 
@@ -1293,8 +1295,16 @@ def topk_cosine_ivfpq_residual_df(
             n=n_cand,
         )
         use_residual = e_res < RESIDUAL_GATE_RATIO * e_ctr
+        log_json(
+            "info", "residual gate", e_res=e_res, e_ctr=e_ctr,
+            ratio=e_res / e_ctr if e_ctr else None,
+            use_residual=use_residual,
+        )
     else:
         use_residual = force_residual
+        log_json(
+            "info", "residual gate", forced=True, use_residual=use_residual
+        )
 
     if not use_residual:
         books = pq_train_fused(

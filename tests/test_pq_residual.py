@@ -494,3 +494,44 @@ def test_forced_residual_on_isotropic_degrades_but_works(spark):
     rows = out.collect()
     assert len(rows) == N_QUERIES * TOP_K
     assert len(_pairs(out)) == N_QUERIES * TOP_K
+
+
+def _json_logs(err: str, msg: str) -> list[dict]:
+    import json
+
+    recs = [json.loads(line[line.index("{"):]) for line in err.splitlines()
+            if '"logger": "concerts_etl_sa_spark"' in line]
+    return [r for r in recs if r["msg"] == msg]
+
+
+def test_dispatch_decisions_are_json_lines_on_stderr(spark, capfd):
+    """Each Lloyd strategy choice (one site serving kmeans_fit and
+    pq_train_fused) and each residual gate decision is one JSON line on
+    stderr, with the quantities it was decided on."""
+    from concerts_etl_sa_spark.operators.kmeans import (
+        DRIVER_TRAIN_MAX_ROWS,
+        _driver_train_auto,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    capfd.readouterr()
+    pq.topk_cosine_ivfpq_residual_df(emb)
+    pq.topk_cosine_ivfpq_residual_df(emb, force_residual=True)
+    assert _driver_train_auto(None, None, 8) is False
+    err = capfd.readouterr().err
+
+    lloyd = _json_logs(err, "lloyd dispatch")
+    # gated build: coarse fit + codebooks; forced: the same two
+    assert [r["k"] for r in lloyd[:-1]] == [8, pq.PQ_K] * 2
+    for r in lloyd[:-1]:
+        assert r["driver_train"] is (r["bound"] <= DRIVER_TRAIN_MAX_ROWS)
+    assert lloyd[-1] == {**lloyd[-1], "bound": None, "k": 8,
+                         "driver_train": False}
+
+    gated, forced = _json_logs(err, "residual gate")
+    assert gated["use_residual"] is (
+        gated["e_res"] < pq.RESIDUAL_GATE_RATIO * gated["e_ctr"]
+    )
+    assert gated["ratio"] == gated["e_res"] / gated["e_ctr"]
+    assert forced == {**forced, "forced": True, "use_residual": True}
+    assert "e_res" not in forced
