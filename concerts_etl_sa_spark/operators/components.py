@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..logging_json import log_json
 from ..sources.readers import load_table
 from .dedup import SIMHASH_NEAR_PAIRS_SQL, simhash_near_pairs
 from .util import driver_rows_df
@@ -184,7 +185,12 @@ def connected_components(
     # overhead on a 2754-vertex bench graph). Identical fixpoint,
     # pinned vs the loop in tests/test_components.py.
     n_sym = sym.count()
-    if n_sym <= driver_max_edges:
+    driver = n_sym <= driver_max_edges
+    log_json(
+        "info", "cc dispatch", n_sym=n_sym, bound=driver_max_edges,
+        driver=driver,
+    )
+    if driver:
         # ONE Arrow transfer (two flat int buffers), never boxed Rows —
         # the r16 driver-boundary hygiene; see _driver_components for
         # the measured RSS numbers at the gate limit

@@ -34,6 +34,17 @@ asymmetric dot approximates cosine):
    (``lp[s·k + code_s]``) — 8 lookups+adds per pair instead of a
    64-term dot, on 8-byte codes instead of 256-byte vectors.
 
+The trained builds — PQ, IVF-PQ, residual IVF-PQ, OPQ, OPQ + IVF-PQ —
+are one builder, :func:`_trained_topk` (optional rotation -> optional
+coarse fit -> optional residual gate -> books -> codebook -> scoring
+tail); each public entry is one call into it. Their sizes are
+constants, the values every caller used: PQ_K codes per subspace,
+3 Lloyd iterations, COARSE_K coarse lists, similarity.NPROBE probed
+lists, similarity.TOP_K results, OPQ_ITERS rotation rounds. Only
+:func:`topk_cosine_ivfpq_residual_df` keeps options (``k_coarse``,
+``force_residual``, ``n_total``): they reach the gate's fixed
+reference fit, the regime probe and the caller-known count.
+
 FP-lockstep with the DuckDB oracle: unit-normalization divides by the
 same correctly-rounded sqrt; every per-subspace dot / squared distance
 is an 8-term left-associated chain on both engines; the final score
@@ -48,7 +59,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..logging_json import log_json
-from .similarity import DIM, N_QUERIES, TOP_K, _norm2, _norm2_sql
+from .kmeans import TRAIN_POINTS_PER_CENTROID
+from .similarity import DIM, N_QUERIES, NPROBE, TOP_K, _norm2, _norm2_sql
 from .util import sorted_small
 
 
@@ -219,12 +231,18 @@ def _query_luts(q: DataFrame, codebook: DataFrame) -> DataFrame:
     return joined.withColumn("lp", lp).select("q_id", "lp")
 
 
-def topk_cosine_pq_df(
-    emb: DataFrame,
-    codebook: DataFrame,
-    top_k: int = TOP_K,
-) -> DataFrame:
-    """(q_id, c_id, adc, rn): per query the top-k candidates by
+def _queries(emb: DataFrame) -> DataFrame:
+    """(q_id, q_vec, _nrm): the query rows (vec_id < N_QUERIES) in the
+    shape :func:`_query_luts` consumes."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
+        _nrm(emb, "embedding").alias("_nrm"),
+    )
+
+
+def topk_cosine_pq_df(emb: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(q_id, c_id, adc, rn): per query the TOP_K candidates by
     asymmetric-distance score (approximate cosine on unit vectors).
     Per pair: m table lookups + adds over the broadcast LUT row — the
     full vectors are never shuffled and never touched again after
@@ -239,12 +257,7 @@ def topk_cosine_pq_df(
     ``similarity._check_band_width``)."""
     from ._cachescope import begin_scope, scoped_persist
 
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        _nrm(emb, "embedding").alias("_nrm"),
-    )
-    luts = _query_luts(q, codebook)
+    luts = _query_luts(_queries(emb), codebook)
     # the encoded (vec_id, codes) frame IS the index — 8 bytes of codes
     # per vector, the thing a production build persists once and every
     # query batch reuses (index-on-write). Scope-persisted like the
@@ -258,7 +271,7 @@ def topk_cosine_pq_df(
     scored = enc.crossJoin(F.broadcast(luts)).withColumn(
         "adc", _adc_col()
     )
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored, TOP_K)
 
 
 def _adc_raw():
@@ -575,55 +588,23 @@ def _table_rows(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def _coarse_fit(
-    emb: DataFrame, k: int, max_iters: int, n: int
-) -> DataFrame:
-    """(centroid_id, centroid_vec, c_n2): Lloyd coarse centroids trained
-    on at most ~TRAIN_POINTS_PER_CENTROID·k rows of ``emb`` (``n`` is
-    its known row count) — the IVF coarse quantizer of every trained
-    build. ``kmeans_fit`` is looked up at call time (the traced
-    benchmark run wraps the module attribute)."""
-    from .kmeans import TRAIN_POINTS_PER_CENTROID, centroids_df, kmeans_fit
+def _coarse_fit(emb: DataFrame, k: int, n: int) -> DataFrame:
+    """(centroid_id, centroid_vec, c_n2): three Lloyd iterations of
+    coarse centroids trained on at most ~TRAIN_POINTS_PER_CENTROID·k
+    rows of ``emb`` (``n`` is its known row count) — the IVF coarse
+    quantizer of every trained build. ``kmeans_fit`` is looked up at
+    call time (the traced benchmark run wraps the module attribute)."""
+    from .kmeans import centroids_df, kmeans_fit
 
     fitted, _ = kmeans_fit(
         emb,
         k=k,
-        max_iters=max_iters,
+        max_iters=3,
         train_sample_rows=TRAIN_POINTS_PER_CENTROID * k,
         train_sample_n=n,
     )
     return centroids_df(emb.sparkSession, fitted).withColumn(
         "c_n2", _norm2("centroid_vec")
-    )
-
-
-def topk_cosine_pq_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    k_codes: int = PQ_K,
-    max_iters: int = 3,
-) -> DataFrame:
-    """PQ top-k over per-subspace kmeans-TRAINED codebooks — the
-    production index build. Deterministic for a given input but not a
-    DuckDB one-shot (iterative trainer), hence pytest-pinned. Uses the
-    FUSED trainer (one job per iteration for all m subspaces) — the
-    sequential :func:`pq_train` is the semantic reference — with the
-    training set bounded at 256·k_codes rows (the FAISS
-    max-points-per-centroid rule; below the cap, bit-identical to
-    unbounded training, which covers every in-repo test fixture)."""
-    from ..sources.readers import load_table
-    from .kmeans import TRAIN_POINTS_PER_CENTROID
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train_fused(
-        emb,
-        k=k_codes,
-        max_iters=max_iters,
-        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_codes,
-        train_sample_n=_table_rows(spark, sf_dir),
-    )
-    return topk_cosine_pq_df(
-        emb, pq_codebook_from_trained(spark, books)
     )
 
 
@@ -848,22 +829,19 @@ def pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def topk_cosine_ivfpq_df(
-    emb: DataFrame,
-    coarse: DataFrame,
-    codebook: DataFrame,
-    nprobe: int,
-    top_k: int = TOP_K,
+    emb: DataFrame, coarse: DataFrame, codebook: DataFrame
 ) -> DataFrame:
     """IVF coarse pruning + PQ scoring — the FAISS-style composition:
     candidates live in inverted lists keyed by their nearest coarse
     centroid AND are stored as PQ codes; a query probes only its
-    ``nprobe`` nearest lists, so the scoring join is an EQUI-join on
+    ``NPROBE`` nearest lists, so the scoring join is an EQUI-join on
     ``centroid_id`` touching ~N·nprobe/K code rows per query instead of
     the flat crossJoin over all N. Divergence from full FAISS IVFADC:
     codes quantize the vector itself, not the residual (x − centroid) —
     residual encoding would couple the codebook to the coarse index and
     break the DuckDB one-shot; the recall cost at these K is measured,
-    not assumed (tests/test_pq.py).
+    not assumed (tests/test_pq.py). The residual form is the gated
+    branch of :func:`_trained_topk`.
 
     ``emb`` needs (vec_id, embedding, norm2); ``coarse`` is the
     (centroid_id, centroid_vec, c_n2) frame ``similarity``'s IVF uses;
@@ -885,29 +863,24 @@ def topk_cosine_ivfpq_df(
             keep=("centroid_id",),
         ),
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        _nrm(emb, "embedding").alias("_nrm"),
-    )
     probes = _assign_buckets(
-        emb.filter(F.col("vec_id") < N_QUERIES), coarse, n_keep=nprobe
+        emb.filter(F.col("vec_id") < N_QUERIES), coarse, n_keep=NPROBE
     ).select(F.col("vec_id").alias("q_id"), "centroid_id")
-    probe_luts = probes.join(_query_luts(q, codebook), "q_id")
+    probe_luts = probes.join(_query_luts(_queries(emb), codebook), "q_id")
     # each candidate has ONE list and a query's nprobe lists are
     # distinct, so a (q, c) pair joins at most once — no dedup needed
     # (same argument as similarity._ivf_topk, round-5 finding)
     scored = index.join(
         F.broadcast(probe_luts), "centroid_id"
     ).withColumn("adc", _adc_col())
-    return _rank_topk(scored, top_k)
+    return _rank_topk(scored, TOP_K)
 
 
 def topk_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed coarse centroids (``similarity.IVF_CENTROID_IDS``) + fixed
     PQ codebook — the DuckDB-oracled variant."""
     from ..sources.readers import load_table
-    from .similarity import IVF_CENTROID_IDS, NPROBE, _emb_normed
+    from .similarity import IVF_CENTROID_IDS, _emb_normed
 
     coarse = (
         load_table(spark, sf_dir, "embeddings", spread=False)
@@ -922,45 +895,6 @@ def topk_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_normed(spark, sf_dir),
         coarse,
         pq_codebook_fixed(spark, sf_dir),
-        nprobe=NPROBE,
-    )
-
-
-def topk_cosine_ivfpq_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    k_coarse: int = 8,
-    k_codes: int = PQ_K,
-    nprobe: int = 2,
-    max_iters: int = 3,
-) -> DataFrame:
-    """Fully-trained IVF-PQ: Lloyd's coarse centroids + per-subspace
-    Lloyd's codebooks — the production index build (pytest-pinned;
-    iterative, not a DuckDB one-shot). Both trainers bound their
-    training sets at 256 points per centroid (the FAISS rule —
-    constant k_coarse/k_codes make both caps constants, so index
-    training touches O(k) rows while encode/assign still see every
-    row; below the caps, bit-identical to unbounded training)."""
-    from ..sources.readers import load_table
-    from .kmeans import TRAIN_POINTS_PER_CENTROID
-    from .similarity import _emb_normed
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # one stride-sizing count, shared by both trainers
-    n_total = _table_rows(spark, sf_dir)
-    coarse = _coarse_fit(emb, k_coarse, max_iters, n_total)
-    books = pq_train_fused(
-        emb,
-        k=k_codes,
-        max_iters=max_iters,
-        train_sample_rows=TRAIN_POINTS_PER_CENTROID * k_codes,
-        train_sample_n=n_total,
-    )
-    return topk_cosine_ivfpq_df(
-        _emb_normed(spark, sf_dir),
-        coarse,
-        pq_codebook_from_trained(spark, books),
-        nprobe=nprobe,
     )
 
 
@@ -1213,177 +1147,6 @@ def _gate_energies(
     e_res = sum(eu[:, 0].tolist()) / len(ids)
     m = (eu[:, 1:].sum(0) / len(ids)).tolist()
     return e_res, 1.0 - sum(x * x for x in m)
-
-
-def topk_cosine_ivfpq_residual_df(
-    emb_raw: DataFrame,
-    k_coarse: int = 8,
-    k_codes: int = PQ_K,
-    nprobe: int = 2,
-    max_iters: int = 3,
-    force_residual: bool | None = None,
-    top_k: int = TOP_K,
-    n_total: int | None = None,
-) -> DataFrame:
-    """IVF-PQ with energy-gated RESIDUAL encoding — full FAISS IVFADC
-    (Jégou 2011 §IV: quantize x − q_coarse(x), not x) with a measured
-    fallback. This closes :func:`topk_cosine_ivfpq_df`'s documented
-    divergence — kept there because residual coupling breaks the
-    DuckDB one-shot; this form is the iterative production build
-    (pytest-pinned, like the other trained paths).
-
-    Composition: trained coarse centroids (sample-bounded, 256·k rule)
-    -> every candidate's residual against its UNIT-normalized list
-    centroid (:func:`_residual_frame`, broadcast join, shuffle-free)
-    -> the GATE: mean residual energy vs the corpus' centered energy
-    on the bounded training sample (:func:`_gate_energies`; ONE
-    sample-sized job serving both statistics). Below
-    ``RESIDUAL_GATE_RATIO`` of the centered energy the codebooks train
-    ON RESIDUALS and the index stores residual codes; at/above it
-    residual coding would only add error (measured on the isotropic
-    AND the realistic anisotropic-blob fixtures — see the constant's
-    derivation table), so the build
-    falls back to the plain trained composition — bit-identical to
-    :func:`topk_cosine_ivfpq_trained` by construction (same trainer
-    calls, same args; pinned by test). ``force_residual`` overrides
-    the gate both ways (the tests' regime probe).
-
-    Residual query side: the LUT machinery is unchanged — the codebook
-    is shared across lists, so per-(query, list) scores differ only by
-    the additive constant dot(q̂, c̄_list) (:func:`_probe_cdots`,
-    Q·nprobe rows) and the score is ``round(c_dot + adc_raw, 6)``.
-    Same shuffle shape as the non-residual form: one equi-join on
-    centroid_id, codes never wider than 8 B + the list id."""
-    from ._cachescope import begin_scope, scoped_persist
-    from .kmeans import TRAIN_POINTS_PER_CENTROID
-    from .similarity import _assign_buckets
-
-    spark = emb_raw.sparkSession
-    # ONE pruned count of the raw table sizes every thinning stride in
-    # the build (coarse fit, energy probe, codebook fit) — the derived
-    # frames' own counts would re-run the coarse assignment. Callers
-    # holding a cheaper count (the wrapper's unspread bare scan) pass it.
-    if n_total is None:
-        n_total = emb_raw.select("vec_id").count()
-    n_cand = n_total - N_QUERIES  # query ids < N_QUERIES by contract
-    coarse = _coarse_fit(emb_raw, k_coarse, max_iters, n_total)
-    emb = (
-        emb_raw
-        if "norm2" in emb_raw.columns
-        else emb_raw.withColumn("norm2", _norm2("embedding"))
-    )
-
-    cb_cap = TRAIN_POINTS_PER_CENTROID * k_codes
-    if force_residual is None:
-        # relative gate (round 13, see RESIDUAL_GATE_RATIO): ONE
-        # sample-sized driver-side reduction serving both statistics —
-        # residual energy vs the corpus' centered energy, ALWAYS
-        # measured against GATE_REF_K reference centroids (a corpus
-        # multi-modality statistic, decoupled from the build's
-        # k_coarse — see the constant's derivation). At the default
-        # k_coarse the build's own coarse fit IS the reference; a
-        # non-default build pays one extra sample-bounded fit.
-        gate_coarse = (
-            coarse
-            if k_coarse == GATE_REF_K
-            else _coarse_fit(emb_raw, GATE_REF_K, max_iters, n_total)
-        )
-        e_res, e_ctr = _gate_energies(
-            emb.filter(F.col("vec_id") >= N_QUERIES),
-            gate_coarse,
-            cb_cap,
-            n=n_cand,
-        )
-        use_residual = e_res < RESIDUAL_GATE_RATIO * e_ctr
-        log_json(
-            "info", "residual gate", e_res=e_res, e_ctr=e_ctr,
-            ratio=e_res / e_ctr if e_ctr else None,
-            use_residual=use_residual,
-        )
-    else:
-        use_residual = force_residual
-        log_json(
-            "info", "residual gate", forced=True, use_residual=use_residual
-        )
-
-    if not use_residual:
-        books = pq_train_fused(
-            emb_raw,
-            k=k_codes,
-            max_iters=max_iters,
-            train_sample_rows=cb_cap,
-            train_sample_n=n_total,
-        )
-        return topk_cosine_ivfpq_df(
-            emb,
-            coarse,
-            pq_codebook_from_trained(spark, books),
-            nprobe=nprobe,
-            top_k=top_k,
-        )
-
-    cbar = _unit_coarse(coarse)
-    cand_res = _residual_frame(
-        _assign_buckets(
-            emb.filter(F.col("vec_id") >= N_QUERIES), coarse, n_keep=1
-        ),
-        cbar,
-    )
-    books = pq_train_fused(
-        cand_res,
-        k=k_codes,
-        max_iters=max_iters,
-        train_sample_rows=cb_cap,
-        train_sample_n=n_cand,
-    )
-    codebook = pq_codebook_from_trained(spark, books)
-
-    begin_scope("ivfpq_res")
-    index = scoped_persist(
-        "ivfpq_res", pq_encode(cand_res, codebook, keep=("centroid_id",))
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        _nrm(emb, "embedding").alias("_nrm"),
-    )
-    probes = _assign_buckets(
-        emb.filter(F.col("vec_id") < N_QUERIES), coarse, n_keep=nprobe
-    )
-    probe_luts = _probe_cdots(probes, cbar).join(
-        _query_luts(q, codebook), "q_id"
-    )
-    scored = index.join(F.broadcast(probe_luts), "centroid_id").withColumn(
-        "adc", F.round(F.col("c_dot") + _adc_raw(), 6)
-    )
-    return _rank_topk(scored, top_k)
-
-
-def topk_cosine_ivfpq_residual(
-    spark: SparkSession,
-    sf_dir: str,
-    k_coarse: int = 8,
-    k_codes: int = PQ_K,
-    nprobe: int = 2,
-    max_iters: int = 3,
-) -> DataFrame:
-    """Registry/bench wrapper of :func:`topk_cosine_ivfpq_residual_df`
-    over the embeddings table. On the isotropic synthetic fixture the
-    gate measures residual/centered energy ~1.48/1.0 and selects the
-    plain trained build (equality with
-    :func:`topk_cosine_ivfpq_trained` pinned by test); on multi-modal
-    clustered corpora (ratio under ``RESIDUAL_GATE_RATIO``) it selects
-    residual codes."""
-    from ..sources.readers import load_table
-
-    return topk_cosine_ivfpq_residual_df(
-        load_table(spark, sf_dir, "embeddings"),
-        k_coarse=k_coarse,
-        k_codes=k_codes,
-        nprobe=nprobe,
-        max_iters=max_iters,
-        n_total=_table_rows(spark, sf_dir),
-    )
 
 
 # ------------------------- SQ8 scalar quantization -------------------------
@@ -1870,32 +1633,36 @@ TOPK_COSINE_IVFPQ_SQL = _topk_cosine_ivfpq_sql()
 OPQ_ITERS = 8  # alternating-minimization rounds for the rotation
 
 
-def opq_rotation(
-    emb: DataFrame,
-    cap: int,
-    n: int,
-    k: int = PQ_K,
-    opq_iters: int = OPQ_ITERS,
-) -> list[list[float]]:
+def opq_rotation(emb: DataFrame, cap: int, n: int) -> list[list[float]]:
     """Train the OPQ orthogonal rotation R (Ge et al., CVPR 2013 — the
     construction behind FAISS's OPQMatrix) on the bounded training
-    sample, driver-side: alternate (a) per-subspace Lloyd's codebooks
-    on the rotated sample with (b) the orthogonal-Procrustes update
-    R = U·Vᵀ from SVD(Xᵀ·Y), Y the sample's codebook reconstruction.
-    The rotation redistributes variance so the PQ_M INDEPENDENT
-    subspace codebooks absorb less error at the same bit budget.
+    sample, driver-side: OPQ_ITERS rounds alternating (a) per-subspace
+    PQ_K-code Lloyd's codebooks on the rotated sample with (b) the
+    orthogonal-Procrustes update R = U·Vᵀ from SVD(Xᵀ·Y), Y the
+    sample's codebook reconstruction. The rotation redistributes
+    variance so the PQ_M INDEPENDENT subspace codebooks absorb less
+    error at the same bit budget.
 
     Driver cost is bounded: the hash-thinned sample is ≤2·cap rows ×
     DIM doubles, collected as one Arrow transfer
     (``kmeans._collect_ids_matrix``; the same bounded-sync-point class
     as the centroid / codebook collects), and the numpy loop touches
-    only that sample. DETERMINISTIC: sample sorted by vec_id,
-    stride-init Lloyd over ``kmeans._np_sq_dists``, LAPACK SVD on
-    identical input. Empty sample -> identity (OPQ degrades to plain
+    only that sample. DETERMINISTIC: sample sorted by vec_id, each
+    subspace fit is the shared driver Lloyd ``kmeans._np_fit_loop``
+    (at most 6 rounds, the common relative-inertia stop) from a stride
+    seed, LAPACK SVD on identical input. The fits train only the
+    ROTATION; the shipped codebooks come from the standard trainer on
+    the rotated frame. Empty sample -> identity (OPQ degrades to plain
     PQ, the safe no-op)."""
     import numpy as np
 
-    from .kmeans import _collect_ids_matrix, _np_sq_dists, train_sample
+    from .kmeans import (
+        REL_TOL,
+        _collect_ids_matrix,
+        _np_fit_loop,
+        _np_sq_dists,
+        train_sample,
+    )
 
     samp = train_sample(emb, "vec_id", cap, n=n).select(
         "vec_id",
@@ -1909,32 +1676,18 @@ def opq_rotation(
     except ValueError:  # empty sample
         return np.eye(DIM).tolist()
     x = x[np.argsort(ids, kind="stable")]
-
-    def _lloyd(xs: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
-        # stride init (the hash-bucket pick's numpy analog), 6 rounds —
-        # this trains only the ROTATION; the shipped codebooks come
-        # from the standard trainer on the rotated frame. Returns
-        # (centroids, final assignment).
-        idx = (np.arange(k) * max(len(xs) // k, 1)) % len(xs)
-        c = xs[idx].copy()
-        for _ in range(6):
-            a = _np_sq_dists(xs, c).argmin(1)
-            for j in range(k):
-                msk = a == j
-                if msk.any():
-                    c[j] = xs[msk].mean(0)
-        return c, _np_sq_dists(xs, c).argmin(1)
-
+    # stride seed, the numpy analog of the hash-bucket pick
+    seed = (np.arange(PQ_K) * max(len(x) // PQ_K, 1)) % len(x)
     r = np.eye(x.shape[1])
-    for _ in range(opq_iters):
+    for _ in range(OPQ_ITERS):
         xr = x @ r
         # a copy, not empty: any column past PQ_M·PQ_SUB (none at DIM)
         # stays deterministic
         y = xr.copy()
         for s in range(PQ_M):
             cols = slice(s * PQ_SUB, (s + 1) * PQ_SUB)
-            c, a = _lloyd(xr[:, cols])
-            y[:, cols] = c[a]
+            c = np.array(_np_fit_loop(xr[:, cols], seed, 6, REL_TOL)[0])
+            y[:, cols] = c[_np_sq_dists(xr[:, cols], c).argmin(1)]
         u, _sv, vt = np.linalg.svd(x.T @ y)
         r = u @ vt
     return [[float(v) for v in row] for row in r]
@@ -1978,102 +1731,224 @@ def _rotated_frame(emb: DataFrame, rot: list[list[float]]) -> DataFrame:
     )
 
 
-def topk_cosine_opq_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    k_codes: int = PQ_K,
-    opq_iters: int = OPQ_ITERS,
-    max_iters: int = 3,
-    top_k: int = TOP_K,
+# ------------------- trained builds: one builder ----------------------
+
+COARSE_K = 8  # coarse lists of the trained IVF builds
+
+
+def _trained_topk(
+    emb_raw: DataFrame,
+    n_total: int | None,
+    rotate: bool = False,
+    k_coarse: int | None = None,
+    gate: bool = False,
+    force_residual: bool | None = None,
 ) -> DataFrame:
-    """OPQ top-k cosine — PQ behind a trained orthogonal rotation
-    (Ge et al. 2013; FAISS ``OPQMatrix`` + PQ), completing the FAISS
-    quantization family next to PQ / IVF+PQ / residual IVFADC / SQ8.
-    Ranking is exactly dot-preserving (R orthogonal:
-    dot(q̂R, x̂R) = dot(q̂, x̂)), so the rotation changes ONLY where the
-    quantization error lands. Measured engine recall@5 at the same 32×
-    compression (sf0.001): 0.30 vs plain PQ-trained's 0.29 on the
-    isotropic table, 0.32 vs 0.29 on the realistic hashed-BoW fixture
-    — modest consistent gains plus the structural NO-HARM invariant
-    (orthogonality means OPQ can never rank worse than its own
-    identity-rotation special case, up to trainer noise; both pinned
-    in tests/test_pq_opq.py). FAISS ships the same construction as the
-    default pretransform for exactly this reason: cheap, never harmful,
-    occasionally decisive on covariance-skewed corpora.
+    """The one trained compressed-index build behind the PQ, IVF-PQ,
+    residual IVF-PQ, OPQ and OPQ + IVF-PQ entries: a deterministic
+    production build, not a DuckDB one-shot (iterative trainers), hence
+    pytest-pinned (tests/test_trainer_golden.py pins every entry's
+    rows). It composes, in order:
 
-    Composition: driver-side bounded-sample alternating minimization
-    for R (:func:`opq_rotation`) -> broadcast rotation projection
-    (:func:`_rotated_frame`, shuffle-free) -> the standard fused
-    distributed codebook trainer on the ROTATED frame -> the standard
-    PQ encode/ADC/rank path. Deterministic but iterative, hence
-    pytest-pinned like the other trained paths."""
-    from ..sources.readers import load_table
-    from .kmeans import TRAIN_POINTS_PER_CENTROID
+    1. ``emb_raw``, the (vec_id, embedding) corpus; vec_id < N_QUERIES
+       are the queries;
+    2. ONE sizing count ``n_total`` — the wrappers pass the unspread
+       bare scan's :func:`_table_rows`, else the frame is counted once.
+       It sizes every thinning stride in the build; the derived frames'
+       own counts would re-run the coarse assignment;
+    3. ``rotate``: the OPQ rotation (:func:`opq_rotation`, driver-side
+       on the bounded sample) applied by :func:`_rotated_frame`, a
+       broadcast projection. Everything downstream is the unrotated
+       machinery on the rotated frame;
+    4. ``k_coarse``: the IVF coarse quantizer (:func:`_coarse_fit`);
+       ``None`` builds the flat PQ index;
+    5. ``gate`` (the residual entry only): the residual/plain decision,
+       one ``residual gate`` JSON line on stderr;
+    6. :func:`pq_train_fused`, the fused all-subspace PQ_K-code books;
+    7. :func:`pq_codebook_from_trained`;
+    8. the scoring tail: :func:`topk_cosine_pq_df`,
+       :func:`topk_cosine_ivfpq_df`, or the residual tail (residual
+       codes, each probed list's score offset by dot(q̂, c̄_list),
+       :func:`_probe_cdots`, Q·nprobe rows).
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_total = _table_rows(spark, sf_dir)
-    cap = TRAIN_POINTS_PER_CENTROID * k_codes
-    base = emb.select(
-        "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
+    The stages are module attributes looked up at call time, so the
+    traced benchmark run and ``tools/stage_profile.py`` wrap them from
+    outside. The entries use five combinations; no other (OPQ with the
+    residual gate, say) is built.
+
+    Training sets: both trainers bound theirs at
+    TRAIN_POINTS_PER_CENTROID = 256 points per centroid (the FAISS
+    max-points-per-centroid rule). k_coarse and PQ_K are constants, so
+    both caps are constants: index training touches O(k) rows while
+    encode/assign still see every row; below the caps — every in-repo
+    fixture — bit-identical to unbounded training. Three Lloyd
+    iterations each.
+
+    Residual IVF-PQ (full FAISS IVFADC, Jégou 2011 §IV: quantize
+    x − q_coarse(x), not x) closes :func:`topk_cosine_ivfpq_df`'s
+    documented divergence, which stays there because residual coupling
+    breaks the DuckDB one-shot. Every candidate's residual is taken
+    against its UNIT-normalized list centroid (:func:`_residual_frame`,
+    broadcast join, shuffle-free). The GATE compares the mean residual
+    energy with the corpus' centered energy on the bounded training
+    sample (:func:`_gate_energies`, ONE sample-sized job for both
+    statistics), always against a GATE_REF_K reference fit — the
+    build's own fit at the default k_coarse, one extra sample-bounded
+    fit otherwise. Under ``RESIDUAL_GATE_RATIO`` of the centered energy
+    the books train ON RESIDUALS and the index stores residual codes;
+    at or above it residual coding only adds error (measured on the
+    isotropic and the realistic anisotropic-blob fixtures — see the
+    constant's derivation table), so the build takes the plain branch,
+    which IS the IVF-PQ build: same frames, same trainer calls. On the
+    isotropic synthetic table the gate reads residual/centered energy
+    ~1.48/1.0 and ships plain; on multi-modal clustered corpora (ratio
+    under the threshold) residual codes. ``force_residual`` overrides
+    the gate both ways (the tests' regime probe). The residual query
+    side keeps the LUT machinery and one equi-join on centroid_id;
+    codes are never wider than 8 B + the list id.
+
+    OPQ (Ge et al. 2013; FAISS ``OPQMatrix`` + PQ, and with the coarse
+    fit FAISS's canonical ``OPQ{m},IVF{K},PQ{m}``): ranking is exactly
+    dot-preserving (R orthogonal: dot(q̂R, x̂R) = dot(q̂, x̂)), so the
+    rotation changes ONLY where the quantization error lands. Measured
+    engine recall@5 at the same 32× compression (sf0.001): 0.30 vs
+    plain PQ-trained's 0.29 on the isotropic table, 0.32 vs 0.29 on
+    the realistic hashed-BoW fixture — modest consistent gains plus
+    the structural NO-HARM invariant: orthogonality means OPQ can never
+    rank worse than its own identity-rotation special case, up to
+    trainer noise (both pinned in tests/test_pq_opq.py, for PQ and for
+    IVF-PQ at equal budget). FAISS ships the same construction as the
+    default pretransform for this reason: cheap, never harmful,
+    occasionally decisive on covariance-skewed corpora. The plan shape
+    and scale story are the unrotated build's plus one broadcast
+    projection."""
+    from ._cachescope import begin_scope, scoped_persist
+    from .similarity import _assign_buckets
+
+    spark = emb_raw.sparkSession
+    if n_total is None:
+        n_total = emb_raw.select("vec_id").count()
+    cap = TRAIN_POINTS_PER_CENTROID * PQ_K
+    src = emb_raw
+    if rotate:
+        base = emb_raw.select(
+            "vec_id", "embedding", _nrm(emb_raw, "embedding").alias("_nrm")
+        )
+        src = _rotated_frame(emb_raw, opq_rotation(base, cap, n_total))
+    coarse = None if k_coarse is None else _coarse_fit(src, k_coarse, n_total)
+    emb = (
+        src
+        if coarse is None or "norm2" in src.columns
+        else src.withColumn("norm2", _norm2("embedding"))
     )
-    rot = opq_rotation(base, cap, n_total, k=k_codes, opq_iters=opq_iters)
-    rotated = _rotated_frame(emb, rot)
+    cands = emb.filter(F.col("vec_id") >= N_QUERIES)
+    use_residual = False
+    if gate and force_residual is None:
+        gate_coarse = (
+            coarse
+            if k_coarse == GATE_REF_K
+            else _coarse_fit(src, GATE_REF_K, n_total)
+        )
+        e_res, e_ctr = _gate_energies(
+            cands, gate_coarse, cap, n=n_total - N_QUERIES
+        )
+        use_residual = e_res < RESIDUAL_GATE_RATIO * e_ctr
+        log_json(
+            "info", "residual gate", e_res=e_res, e_ctr=e_ctr,
+            ratio=e_res / e_ctr if e_ctr else None,
+            use_residual=use_residual,
+        )
+    elif gate:
+        use_residual = force_residual
+        log_json(
+            "info", "residual gate", forced=True, use_residual=use_residual
+        )
+    train, n_train = src, n_total
+    if use_residual:
+        cbar = _unit_coarse(coarse)
+        train = _residual_frame(_assign_buckets(cands, coarse, n_keep=1), cbar)
+        n_train = n_total - N_QUERIES
     books = pq_train_fused(
-        rotated,
-        k=k_codes,
-        max_iters=max_iters,
-        train_sample_rows=cap,
-        train_sample_n=n_total,
+        train, train_sample_rows=cap, train_sample_n=n_train
     )
-    return topk_cosine_pq_df(
-        rotated, pq_codebook_from_trained(spark, books), top_k=top_k
+    codebook = pq_codebook_from_trained(spark, books)
+    if coarse is None:
+        return topk_cosine_pq_df(src, codebook)
+    if not use_residual:
+        return topk_cosine_ivfpq_df(emb, coarse, codebook)
+
+    begin_scope("ivfpq_res")
+    index = scoped_persist(
+        "ivfpq_res", pq_encode(train, codebook, keep=("centroid_id",))
     )
+    # the codebook is shared across lists, so per-(query, list) scores
+    # differ only by the additive constant dot(q̂, c̄_list)
+    probes = _assign_buckets(
+        emb.filter(F.col("vec_id") < N_QUERIES), coarse, n_keep=NPROBE
+    )
+    probe_luts = _probe_cdots(probes, cbar).join(
+        _query_luts(_queries(emb), codebook), "q_id"
+    )
+    scored = index.join(F.broadcast(probe_luts), "centroid_id").withColumn(
+        "adc", F.round(F.col("c_dot") + _adc_raw(), 6)
+    )
+    return _rank_topk(scored, TOP_K)
+
+
+def _table(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """Steps 1-2 of :func:`_trained_topk` for the table entries: the
+    embeddings scan and its :func:`_table_rows` count."""
+    from ..sources.readers import load_table
+
+    return load_table(spark, sf_dir, "embeddings"), _table_rows(spark, sf_dir)
+
+
+def topk_cosine_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ top-k over fused-trained codebooks (:func:`_trained_topk`)."""
+    return _trained_topk(*_table(spark, sf_dir))
+
+
+def topk_cosine_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ over Lloyd's coarse centroids (COARSE_K lists) and
+    fused-trained codebooks (:func:`_trained_topk`)."""
+    return _trained_topk(*_table(spark, sf_dir), k_coarse=COARSE_K)
+
+
+def topk_cosine_ivfpq_residual_df(
+    emb_raw: DataFrame,
+    k_coarse: int = COARSE_K,
+    force_residual: bool | None = None,
+    n_total: int | None = None,
+) -> DataFrame:
+    """IVF-PQ with energy-gated RESIDUAL encoding over any (vec_id,
+    embedding[, norm2]) frame (:func:`_trained_topk`). ``k_coarse``
+    sizes the build's coarse fit, never the gate's reference fit;
+    ``force_residual`` overrides the gate; ``n_total`` is the
+    caller-known row count of ``emb_raw`` (counted when omitted)."""
+    return _trained_topk(
+        emb_raw, n_total, k_coarse=k_coarse, gate=True,
+        force_residual=force_residual,
+    )
+
+
+def topk_cosine_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gated residual IVF-PQ over the embeddings table
+    (:func:`_trained_topk`); its plain branch is
+    :func:`topk_cosine_ivfpq_trained`."""
+    return _trained_topk(*_table(spark, sf_dir), k_coarse=COARSE_K, gate=True)
+
+
+def topk_cosine_opq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OPQ top-k: PQ behind a trained orthogonal rotation
+    (:func:`_trained_topk`)."""
+    return _trained_topk(*_table(spark, sf_dir), rotate=True)
 
 
 def topk_cosine_opq_ivfpq_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    k_coarse: int = 8,
-    k_codes: int = PQ_K,
-    nprobe: int = 2,
-    opq_iters: int = OPQ_ITERS,
-    max_iters: int = 3,
-    top_k: int = TOP_K,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OPQ + IVF + PQ — FAISS's canonical production index string
-    (``OPQ{m},IVF{K},PQ{m}``): the trained rotation in front of the
-    fully-trained inverted-list PQ composition. Everything downstream
-    of the rotation IS the existing machinery on the rotated frame
-    (coarse Lloyd fit, fused codebooks, centroid_id-equi-join ADC
-    scoring), and the rotation is dot-preserving, so the composition's
-    plan shape and scale story are exactly
-    :func:`topk_cosine_ivfpq_trained`'s plus one broadcast projection.
-    Pytest-pinned (iterative) like every trained path
-    (tests/test_pq_opq.py: no-harm vs plain IVF+PQ-trained at equal
-    budget on both fixtures)."""
-    from ..sources.readers import load_table
-    from .kmeans import TRAIN_POINTS_PER_CENTROID
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_total = _table_rows(spark, sf_dir)
-    cap = TRAIN_POINTS_PER_CENTROID * k_codes
-    base = emb.select(
-        "vec_id", "embedding", _nrm(emb, "embedding").alias("_nrm")
-    )
-    rot = opq_rotation(base, cap, n_total, k=k_codes, opq_iters=opq_iters)
-    rotated = _rotated_frame(emb, rot)
-    coarse = _coarse_fit(rotated, k_coarse, max_iters, n_total)
-    books = pq_train_fused(
-        rotated,
-        k=k_codes,
-        max_iters=max_iters,
-        train_sample_rows=cap,
-        train_sample_n=n_total,
-    )
-    return topk_cosine_ivfpq_df(
-        rotated,
-        coarse,
-        pq_codebook_from_trained(spark, books),
-        nprobe=nprobe,
-        top_k=top_k,
+    """OPQ + IVF + PQ, FAISS's ``OPQ{m},IVF{K},PQ{m}``
+    (:func:`_trained_topk`)."""
+    return _trained_topk(
+        *_table(spark, sf_dir), rotate=True, k_coarse=COARSE_K
     )

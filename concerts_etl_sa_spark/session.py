@@ -45,6 +45,10 @@ def get_spark(app_name: str = "concerts_etl_sa_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # pyspark-shell turns the console progress bar on; its
+        # carriage-return frames share stderr with the log_json lines
+        # and would land on the same text line as a JSON record
+        .config("spark.ui.showConsoleProgress", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

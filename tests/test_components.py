@@ -51,6 +51,29 @@ def test_connected_components_matches_union_find(spark):
     assert got_loop == expected
 
 
+def test_cc_dispatch_is_one_json_line_on_stderr(spark, capfd):
+    """Each strategy choice is one JSON line on stderr with the count it
+    was decided on: the default bound sends the sf0.001 near-dup graph
+    to the driver closure, a zero bound to the BSP loop."""
+    import json
+
+    edges_df = simhash_near_pairs(spark, SF_DIR).select("a_id", "b_id")
+    capfd.readouterr()
+    CC.connected_components(edges_df).collect()
+    CC.connected_components(edges_df, driver_max_edges=0).collect()
+    recs = [
+        json.loads(line)
+        for line in capfd.readouterr().err.splitlines()
+        if '"msg": "cc dispatch"' in line
+    ]
+    n_sym = recs[0]["n_sym"]
+    assert n_sym > 0
+    assert [(r["n_sym"], r["bound"], r["driver"]) for r in recs] == [
+        (n_sym, CC.DRIVER_CC_MAX_SYM_ROWS, True),
+        (n_sym, 0, False),
+    ]
+
+
 def test_connected_components_chain_converges(spark):
     # worst-case shape for label propagation: a single long chain
     n = 64

@@ -499,7 +499,9 @@ def test_forced_residual_on_isotropic_degrades_but_works(spark):
 def _json_logs(err: str, msg: str) -> list[dict]:
     import json
 
-    recs = [json.loads(line[line.index("{"):]) for line in err.splitlines()
+    # whole lines: a record with anything in front of it (a console
+    # progress frame, say) fails here instead of being sliced clean
+    recs = [json.loads(line) for line in err.splitlines()
             if '"logger": "concerts_etl_sa_spark"' in line]
     return [r for r in recs if r["msg"] == msg]
 
@@ -513,6 +515,9 @@ def test_dispatch_decisions_are_json_lines_on_stderr(spark, capfd):
         _driver_train_auto,
     )
 
+    assert spark.sparkContext.getConf().get(
+        "spark.ui.showConsoleProgress"
+    ) == "false"
     emb = load_table(spark, SF_DIR, "embeddings")
     capfd.readouterr()
     pq.topk_cosine_ivfpq_residual_df(emb)

@@ -5,8 +5,8 @@ parity at 1e-9 and recall floors, so a trainer that drifted in its last
 bits — a different seed row order, distance kernel or stop test — could
 still pass them. These pins fix the exact output instead: a sha256 of
 the ``pq_train_fused`` books on the driver-side and distributed
-branches, the oracle-form books, the OPQ rotation and the
-``topk_cosine_ivfpq_trained`` rows, all at sf0.001. The digests were
+branches, the oracle-form books, the OPQ rotation and the ranked rows
+of every trained build, all at sf0.001. The digests were
 recorded from the trainers' earlier standalone form (their own driver
 Lloyd loop, Arrow collect, distance kernel and two-step seed pick), so
 they hold the shared k-means core to the same books bit for bit.
@@ -59,6 +59,25 @@ IVFPQ_TRAINED_GOLDEN = (
     "230c6df8f017ddb4017b3cc311f61c93828f36d8a6b522a959d4e52bd6079e23",
     100,
 )
+ROWS_GOLDEN = {
+    # build -> (sha256 of the sorted rows, row count)
+    "pq_trained": (
+        "51ad738316d483afb5679ced47fd3741e6f99a6f3a2d365a6b42e178f784be67",
+        100,
+    ),
+    "opq_trained": (
+        "90287f3fccb1693a7440b680641b4dd0d1210be6bf3e81d8674d7550171d7f9e",
+        100,
+    ),
+    "opq_ivfpq_trained": (
+        "95ed42b09aec9c9add17b1a7d5592da15baa3ab24ddf91ddebc72beaae66fec6",
+        100,
+    ),
+    "ivfpq_residual_forced": (
+        "b8c36e047174cc10d888f065c83f7b7aba621ab09f33cf5d910da003c62e5653",
+        100,
+    ),
+}
 
 
 def _digest(obj) -> str:
@@ -100,12 +119,31 @@ def test_opq_rotation_golden(spark):
     assert _digest(PQ.opq_rotation(base, 256 * PQ.PQ_K, 500)) == OPQ_GOLDEN
 
 
+def _rows_digest(df) -> tuple[str, int]:
+    rows = sorted(tuple(r) for r in df.collect())
+    return _digest([list(r) for r in rows]), len(rows)
+
+
 def test_ivfpq_trained_rows_golden(spark):
-    rows = sorted(
-        tuple(r) for r in PQ.topk_cosine_ivfpq_trained(spark, SF_DIR).collect()
-    )
-    got = (_digest([list(r) for r in rows]), len(rows))
+    got = _rows_digest(PQ.topk_cosine_ivfpq_trained(spark, SF_DIR))
     assert got == IVFPQ_TRAINED_GOLDEN
+
+
+_BUILDS = {
+    "pq_trained": lambda spark: PQ.topk_cosine_pq_trained(spark, SF_DIR),
+    "opq_trained": lambda spark: PQ.topk_cosine_opq_trained(spark, SF_DIR),
+    "opq_ivfpq_trained": lambda spark: PQ.topk_cosine_opq_ivfpq_trained(
+        spark, SF_DIR
+    ),
+    "ivfpq_residual_forced": lambda spark: PQ.topk_cosine_ivfpq_residual_df(
+        load_table(spark, SF_DIR, "embeddings"), force_residual=True
+    ),
+}
+
+
+@pytest.mark.parametrize("build", sorted(ROWS_GOLDEN))
+def test_trained_build_rows_golden(spark, build):
+    assert _rows_digest(_BUILDS[build](spark)) == ROWS_GOLDEN[build]
 
 
 def test_distributed_seed_pick_is_one_aggregation(spark, monkeypatch):
